@@ -59,6 +59,7 @@ END_TO_END_UNITS = {
     "correct_frac": "frac",
     "peak_rss_mb": "MB",
 }
+TIMES = ("setup_s", "wall_s", "query_p50_s", "query_max_s")
 # Per-query layer counters, summed over a pass (per-query medians).
 LAYER_SUM_UNITS = {
     "queries.build_s": "s",
@@ -412,12 +413,13 @@ def _cpu_times() -> list[int]:
         return [int(x) for x in f.readline().split()[1:]]
 
 
-def _steal_frac(before: list[int], after: list[int]) -> float:
-    """Share of the host's CPU time taken by the hypervisor (``steal``)
-    between two ``/proc/stat`` readings: other tenants' load, which
-    slows a run without showing in its own counters."""
-    delta = [a - b for a, b in zip(after, before)]
-    return delta[7] / sum(delta) if sum(delta) else 0.0
+def stolen_share(before: list[int], after: list[int]) -> float:
+    """Share of the CPU time the VM wanted, between two ``/proc/stat``
+    readings, that the hypervisor gave to other tenants instead
+    (``steal`` over user + nice + system + irq + softirq + steal)."""
+    d = [a - b for a, b in zip(after, before)]
+    wanted = d[0] + d[1] + d[2] + d[5] + d[6] + d[7]
+    return d[7] / wanted if wanted else 0.0
 
 
 def spark_settings(work: str) -> tuple[dict, dict]:
@@ -473,13 +475,14 @@ def run(args) -> dict:
 
     spark = None
     try:
-        t0 = time.perf_counter()
+        cpu0, t0 = _cpu_times(), time.perf_counter()
         spark = get_spark(app_name="perfbench", cpus=cores, extra_conf=conf)
         t1 = time.perf_counter()
         for t in TABLES:  # touch every column chunk: page cache, codegen, JIT
             df = load_table(spark, sf_dir, t)
             df.agg(*[F.count(F.col(c)) for c in df.columns]).collect()
         t2 = time.perf_counter()
+        stolen_setup = stolen_share(cpu0, _cpu_times())
 
         tracer = Tracer(run_id) if args.trace else None
         bench = Bench(spark, sf_dir, expected, Probe(spark) if args.trace else None, tracer)
@@ -491,7 +494,7 @@ def run(args) -> dict:
         for n in range(timed_passes(args.seconds, bool(args.trace))):
             passes.append(bench.run_pass(order, bool(args.trace), root_span, n))
         end = time.perf_counter()
-        steal = _steal_frac(cpu_start, _cpu_times())
+        stolen_timed = stolen_share(cpu_start, _cpu_times())
         jvm_pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
         peak_rss_mb = _vm_hwm_mb(jvm_pid)
         env_block = {
@@ -509,7 +512,8 @@ def run(args) -> dict:
             "timed_s": end - start,
             "loadavg_start": load_start,
             "loadavg_end": _loadavg(),
-            "steal_frac": steal,
+            "stolen_share_setup": stolen_setup,
+            "stolen_share_timed": stolen_timed,
             "pyspark": pyspark.__version__,
             "java": spark.sparkContext._jvm.System.getProperty("java.runtime.version"),
             "python": platform.python_version(),
@@ -526,6 +530,13 @@ def run(args) -> dict:
             units = PER_LAYER_UNITS
         else:
             metrics = end_to_end(passes, t2 - t0, peak_rss_mb, bench.attempted, bench.failed)
+            env_block["measured"] = {k: metrics[k] for k in TIMES}
+            # The work is CPU-bound (tables in page cache, no network), so
+            # time the hypervisor withheld is time the run would not
+            # have waited on an idle host.
+            metrics["setup_s"] *= 1 - stolen_setup
+            for k in TIMES[1:]:
+                metrics[k] *= 1 - stolen_timed
             units = END_TO_END_UNITS
         per_query = _by_query([r for p in passes for r in p["records"]], lambda r: r["total_s"])
     finally:
