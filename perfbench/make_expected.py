@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
 """Record ``expected.json``: the (rows, hash) the benchmark checks.
 
-    python3 perfbench/make_expected.py          # from the repository root
+    python3 perfbench/make_expected.py [sf0.01 testdata dir]
 
-For every query of every workload, on the benchmark's generated
-tables, this builds the query through the registry, collects its full
+For every query of every workload, on the engine's sf0.01 testdata (by
+default the copy in ``perfbench/data/sf0.01``), this builds the query through the registry, collects its full
 result and compares it cell by cell (columns by name, rows sorted,
 floats by ``repr``) with the query's DuckDB oracle over the same
 parquet files.  Only when every query matches its oracle, and its
 forcing aggregate gives the same (rows, hash) on two separate builds,
-is the file written.
+is the file written, with the sha256 of every table it was recorded on.
 """
 
 from __future__ import annotations
@@ -22,9 +22,8 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
-import datagen  # noqa: E402
 import run as bench  # noqa: E402
-from workloads import SF, WORKLOADS  # noqa: E402
+from workloads import DATA_DIR, WORKLOADS  # noqa: E402
 
 
 def _cell(v):
@@ -57,16 +56,15 @@ def oracle_mismatch(spark, con, name: str, sf_dir: str, registry) -> str | None:
 
 
 def main() -> int:
-    root = os.getcwd()
-    sys.path.insert(0, root)
+    sys.path.insert(0, bench.ROOT)
     import duckdb
 
     from big_data_projects_spark.data import TABLES
     from big_data_projects_spark.queries import REGISTRY
     from big_data_projects_spark.session import ensure_runtime_conf, get_spark
 
-    sf_dir = datagen.ensure(SF, os.path.join(root, ".bench_data"))
-    work = os.path.join(root, ".bench_run", "make-expected")
+    sf_dir = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 else DATA_DIR)
+    work = os.path.join(bench.ROOT, ".bench_run", "make-expected")
     env, conf = bench.spark_settings(work)
     for d in (env["TMPDIR"], env["SPARK_LOCAL_DIRS"]):
         os.makedirs(d, exist_ok=True)
@@ -105,7 +103,7 @@ def main() -> int:
         print(json.dumps({"problems": problems}, indent=1))
         return 1
     with open(os.path.join(HERE, "expected.json"), "w") as f:
-        json.dump({"data": bench.data_tag(), "oracle": "duckdb " + duckdb.__version__,
+        json.dump({"tables": bench.table_digests(sf_dir), "oracle": "duckdb " + duckdb.__version__,
                    "queries": records}, f, indent=1, sort_keys=True)
         f.write("\n")
     return 0

@@ -1,11 +1,14 @@
 #!/usr/bin/env python3
 """The engine's repeatable benchmark: one workload, one seed, one run.
 
-    python3 perfbench/run.py --workload olap_sf001 --seed 1 --seconds 14 --trace 0
+    python3 perfbench/run.py --workload olap_sf001 --seed 1 --seconds 16 --trace 0
 
-Run from the repository root.  One closed-loop client (a single
-process, one query at a time) drives ``local[<cores>]`` through the
-package's public entry points and times each call from outside:
+It may be started from any directory: the checkout is the parent of
+this file's directory.  One closed-loop client (a single process, one
+query at a time) drives ``local[<cores>]`` through the package's public
+entry points, over the engine's sf0.01 testdata (``--data``; by default
+the copy in ``perfbench/data/sf0.01``), and times each call from
+outside:
 
 * ``session.get_spark`` and the ``data.load_table`` warm-up (set-up);
 * ``REGISTRY[name].spark(spark, sf_dir)`` — the builder, as the
@@ -20,14 +23,16 @@ prints the end-to-end metrics.  ``--trace 1`` instruments half of the
 calls, alternating by pass so that every query is called both plain
 and instrumented.  The instrumentation is job-id-range stage
 accounting from Spark's status store, Catalyst phase times, a
-StreamingQueryListener, and in-memory spans written out at the end.
-It prints the per-layer metrics plus the tracing overhead.  The last
-line of stdout is the result object; README.md defines every metric.
+StreamingQueryListener registered for the call, and in-memory spans
+written out at the end.  It prints the per-layer metrics plus the
+tracing overhead.  The last line of stdout is the result object;
+README.md defines every metric.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import math
 import os
@@ -42,11 +47,11 @@ import traceback
 import uuid
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)  # the checkout the benchmark runs in
 if HERE not in sys.path:
     sys.path.insert(0, HERE)
 
-import datagen  # noqa: E402
-from workloads import PASS_S, SF, WORKLOADS, query_order  # noqa: E402
+from workloads import DATA_DIR, PASS_S, WORKLOADS, query_order  # noqa: E402
 
 DRIVER_MEMORY = "3g"
 MB = 1024 * 1024
@@ -122,16 +127,24 @@ def check_result(name: str, rows: int, digest: int, expected: dict) -> str | Non
     return None
 
 
-def load_expected(path: str) -> dict:
+def table_digests(sf_dir: str) -> dict[str, str]:
+    """sha256 of every table file the engine reads from ``sf_dir``."""
+    from big_data_projects_spark.data import TABLES
+
+    out = {}
+    for t in TABLES:
+        with open(os.path.join(sf_dir, f"{t}.parquet"), "rb") as f:
+            out[t] = hashlib.sha256(f.read()).hexdigest()
+    return out
+
+
+def load_expected(path: str, sf_dir: str) -> dict:
+    """The records, once ``sf_dir`` holds the tables they were recorded on."""
     with open(path) as f:
         doc = json.load(f)
-    if doc.get("data") != data_tag():
-        raise SystemExit(f"{path} was recorded on data {doc.get('data')!r}, not {data_tag()!r}")
+    if table_digests(sf_dir) != doc["tables"]:
+        raise SystemExit(f"{sf_dir} does not hold the tables {path} was recorded on")
     return doc["queries"]
-
-
-def data_tag() -> str:
-    return f"sf{SF}-v{datagen.FORMAT_VERSION}"
 
 
 # --------------------------------------------------------------------------
@@ -143,24 +156,37 @@ class Probe:
     Jobs are attributed by job-id range: ``statusStore().jobsList``
     lists jobs newest first, so the jobs a call launched are the ones
     above the newest id seen before it — including micro-batch jobs
-    that run on a stream's own thread.
+    that run on a stream's own thread.  The stream listener is
+    registered only while an instrumented call runs, so plain calls do
+    not pay for it.
     """
 
     def __init__(self, spark):
+        self.streams = spark.streams
         self.sc = spark.sparkContext._jsc.sc()
         self.store = self.sc.statusStore()
         self.listener = _stream_listener()
-        spark.streams.addListener(self.listener)
 
     def flush(self) -> None:
         self.sc.listenerBus().waitUntilEmpty()
+
+    def attach(self) -> None:
+        self.flush()
+        self.listener.events = []
+        self.streams.addListener(self.listener)
+
+    def detach(self) -> list:
+        """Stop listening; the progress reports seen since ``attach``."""
+        self.flush()
+        self.streams.removeListener(self.listener)
+        return self.listener.events
 
     def last_job(self) -> int:
         jobs = self.store.jobsList(None)
         return jobs.apply(0).jobId() if jobs.size() else -1
 
     def jobs_since(self, job_id: int) -> list:
-        self.flush()
+        self.flush()  # the status store fills from the listener bus
         jobs, out = self.store.jobsList(None), []
         for i in range(jobs.size()):
             job = jobs.apply(i)
@@ -281,24 +307,29 @@ class Bench:
 
     def run_query(self, name: str, traced: bool, parent: int | None = None) -> dict:
         """Build, force and check one query; a traced call also reads
-        Spark's counters and records spans."""
+        Spark's counters and records spans.  ``wall_s`` is the whole
+        call, probe work included, so that instrumented minus plain
+        calls is what tracing costs."""
         probe = self.probe if traced else None
         rec: dict = {"query": name, "traced": traced}
         self.attempted += 1
+        start = time.perf_counter()
         if probe:
-            probe.flush()
-            j0, ev0 = probe.last_job(), len(probe.listener.events)
-        t0 = time.perf_counter()
+            probe.attach()
+            j0 = probe.last_job()
         try:
+            t0 = time.perf_counter()
             df = self.registry[name].spark(self.spark, self.sf_dir)
-            t1 = time.perf_counter()
+            t1 = t1b = time.perf_counter()
             if probe:
                 build_jobs = probe.jobs_since(j0)
                 j1 = build_jobs[0].jobId() if build_jobs else j0
-                t1b = time.perf_counter()  # excludes the probe's own reads
+                t1b = time.perf_counter()  # force_s leaves out the probe's reads
             forced = forcing_aggregate(df)
             row = forced.collect()[0]
             t2 = time.perf_counter()
+            if probe:
+                force_jobs = probe.jobs_since(j1)
         except Exception as e:  # a raise is a failed query, never dropped
             traceback.print_exc()
             msg = f"{type(e).__name__}: {str(e).strip().splitlines()[0] if str(e).strip() else ''}"
@@ -308,34 +339,34 @@ class Bench:
             return rec
         finally:
             self.ensure_conf(self.spark)
-        build_s, force_s = t1 - t0, t2 - (t1b if probe else t1)
+            if probe:
+                events = probe.detach()
+        build_s, force_s = t1 - t0, t2 - t1b
         rec.update(build_s=build_s, force_s=force_s, total_s=build_s + force_s)
         problem = check_result(name, int(row["n"]), int(row["h"]), self.expected)
         if problem:
             self.failures[name] = problem
             self.failed += 1
             rec["error"] = problem
-        if not probe:
-            return rec
-        force_jobs = probe.jobs_since(j1)
-        layers = {
-            "queries.build_s": build_s,
-            "queries.build_jobs": len(build_jobs),
-            "measure.force_s": force_s,
-            "measure.jobs": len(force_jobs),
-            # The builder's DataFrame carries only its analysis; the
-            # optimizer and planner run on the forced aggregate.
-            "catalyst.analysis_ms": phase_ms(df._jdf, "analysis") + phase_ms(forced._jdf, "analysis"),
-            "catalyst.optimization_ms": phase_ms(forced._jdf, "optimization"),
-            "catalyst.planning_ms": phase_ms(forced._jdf, "planning"),
-            **probe.stage_totals(build_jobs + force_jobs),
-            **stream_totals(probe.listener.events[ev0:]),
-        }
-        rec["layers"] = layers
-        if self.tracer:
-            q = self.tracer.span("query", parent, t0, t2, query=name, rows=int(row["n"]))
-            self.tracer.span("build", q, t0, t1, jobs=len(build_jobs))
-            self.tracer.span("force", q, t1b, t2, jobs=len(force_jobs))
+        if probe:
+            rec["layers"] = {
+                "queries.build_s": build_s,
+                "queries.build_jobs": len(build_jobs),
+                "measure.force_s": force_s,
+                "measure.jobs": len(force_jobs),
+                # The builder's DataFrame carries only its analysis; the
+                # optimizer and planner run on the forced aggregate.
+                "catalyst.analysis_ms": phase_ms(df._jdf, "analysis") + phase_ms(forced._jdf, "analysis"),
+                "catalyst.optimization_ms": phase_ms(forced._jdf, "optimization"),
+                "catalyst.planning_ms": phase_ms(forced._jdf, "planning"),
+                **probe.stage_totals(build_jobs + force_jobs),
+                **stream_totals(events),
+            }
+            if self.tracer:
+                q = self.tracer.span("query", parent, t0, t2, query=name, rows=int(row["n"]))
+                self.tracer.span("build", q, t0, t1, jobs=len(build_jobs))
+                self.tracer.span("force", q, t1b, t2, jobs=len(force_jobs))
+        rec["wall_s"] = time.perf_counter() - start
         return rec
 
     def run_pass(self, order: list[str], traced: bool, parent: int | None, n: int = 0) -> dict:
@@ -388,9 +419,13 @@ def per_layer(passes: list[dict], session_s: float, warm_s: float, cores: int) -
     out = {"session.start_s": session_s, "data.warm_s": warm_s}
     for key in LAYER_SUM_UNITS:
         out[key] = sum(_by_query(traced, lambda r: r["layers"][key]).values())
-    traced_wall = sum(_by_query(traced, lambda r: r["total_s"]).values())
-    plain_wall = sum(_by_query(plain, lambda r: r["total_s"]).values())
-    out["executor.parallel_eff"] = out["executor.task_s"] / (traced_wall * cores) if traced_wall else 0.0
+    # Build + force only: the probe's own reads are not executor time.
+    busy = sum(_by_query(traced, lambda r: r["total_s"]).values())
+    out["executor.parallel_eff"] = out["executor.task_s"] / (busy * cores) if busy else 0.0
+    # Traced minus untraced wall: each query's median instrumented call,
+    # probe work and listener included, less its median plain call.
+    traced_wall = sum(_by_query(traced, lambda r: r["wall_s"]).values())
+    plain_wall = sum(_by_query(plain, lambda r: r["wall_s"]).values())
     out["trace.overhead_s"] = traced_wall - plain_wall
     return out
 
@@ -431,12 +466,11 @@ def spark_settings(work: str) -> tuple[dict, dict]:
     Python workers, so UDF and data-source queries import the package
     whatever the current directory is.
     """
-    root = os.getcwd()
     tmp = os.path.join(work, "tmp")
     env = {
         "TMPDIR": tmp,
         "SPARK_LOCAL_DIRS": os.path.join(work, "spark-local"),
-        "PYTHONPATH": os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p),
+        "PYTHONPATH": os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
     }
     conf = {
         "spark.driver.memory": DRIVER_MEMORY,
@@ -448,8 +482,7 @@ def spark_settings(work: str) -> tuple[dict, dict]:
 
 
 def run(args) -> dict:
-    root = os.getcwd()
-    sys.path.insert(0, root)
+    sys.path.insert(0, ROOT)
     import pyspark
 
     from big_data_projects_spark.data import TABLES, load_table
@@ -461,10 +494,10 @@ def run(args) -> dict:
     unknown = [q for q in order if q not in REGISTRY]
     if unknown:
         raise SystemExit(f"workload {args.workload} names unregistered queries: {unknown}")
-    expected = load_expected(args.expected)
-    sf_dir = datagen.ensure(SF, os.path.join(root, ".bench_data"))
+    sf_dir = os.path.abspath(args.data)
+    expected = load_expected(args.expected, sf_dir)
     run_id = uuid.uuid4().hex[:12]
-    work = os.path.join(root, ".bench_run", run_id)
+    work = os.path.join(ROOT, ".bench_run", run_id)
     env, conf = spark_settings(work)
     for d in (env["TMPDIR"], env["SPARK_LOCAL_DIRS"]):
         os.makedirs(d, exist_ok=True)
@@ -507,7 +540,7 @@ def run(args) -> dict:
             "cores": cores,
             "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
             "driver_memory": spark.sparkContext.getConf().get("spark.driver.memory"),
-            "data": data_tag(),
+            "data": sf_dir,
             "timed_passes": len(passes),
             "timed_s": end - start,
             "loadavg_start": load_start,
@@ -520,11 +553,11 @@ def run(args) -> dict:
         }
         if tracer:
             tracer.spans[root_span]["end_s"] = end
-            os.makedirs(os.path.join(root, ".bench_run", "traces"), exist_ok=True)
-            path = os.path.join(root, ".bench_run", "traces", f"{run_id}.json")
+            os.makedirs(os.path.join(ROOT, ".bench_run", "traces"), exist_ok=True)
+            path = os.path.join(ROOT, ".bench_run", "traces", f"{run_id}.json")
             with open(path, "w") as f:
                 json.dump({"env": env_block, "spans": tracer.spans}, f)
-            env_block["trace_file"] = os.path.relpath(path, root)
+            env_block["trace_file"] = os.path.relpath(path, ROOT)
             env_block["spans"] = len(tracer.spans)
             metrics = per_layer(passes, t1 - t0, t2 - t1, cores)
             units = PER_LAYER_UNITS
@@ -582,13 +615,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--data", default=DATA_DIR,
+                    help="the engine's read-only sf0.01 testdata directory")
     ap.add_argument("--expected", default=os.path.join(HERE, "expected.json"),
                     help="(rows, hash) records to check results against")
     args = ap.parse_args(argv)
-    if not os.path.isdir(os.path.join(os.getcwd(), "big_data_projects_spark")):
-        print("perfbench: run from the repository root (no big_data_projects_spark/ here)",
-              file=sys.stderr)
-        return 2
     result = run(args)
     print(json.dumps(result))
     return 0

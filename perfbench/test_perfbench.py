@@ -1,9 +1,11 @@
 """The benchmark's own tests.
 
-    python3 -m pytest perfbench/test_perfbench.py -q      # from the repository root
+    python3 -m pytest perfbench/test_perfbench.py -q
 
-The first three tests are pure Python.  The last two each start Spark
-through ``run.py`` (about a minute apiece) on the olap workload.
+The first five tests are pure Python.  The last two each start Spark
+through ``run.py`` (about a minute apiece) on the olap workload, from a
+directory outside the checkout, so its Python-UDF query also checks the
+workers' import path.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
 import run as bench  # noqa: E402
-from workloads import WORKLOADS, query_order  # noqa: E402
+from workloads import DATA_DIR, WORKLOADS, query_order  # noqa: E402
 
 BENCHMARK = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
 
@@ -38,6 +40,13 @@ def test_benchmark_json_matches_the_runner():
     assert layer == bench.PER_LAYER_UNITS
 
 
+def test_records_were_made_on_the_committed_tables():
+    sys.path.insert(0, ROOT)
+    doc = json.load(open(os.path.join(HERE, "expected.json")))
+    assert bench.table_digests(DATA_DIR) == doc["tables"]
+    assert set(doc["queries"]) == {q for w in WORKLOADS.values() for q in w["queries"]}
+
+
 def test_wrong_hash_counts_as_failure():
     expected = {"q": {"rows": 3, "hash": 11}}
     assert bench.check_result("q", 3, 11, expected) is None
@@ -46,8 +55,7 @@ def test_wrong_hash_counts_as_failure():
     assert bench.check_result("other", 3, 11, expected) == "no expected record"
 
 
-def test_workers_import_the_package_from_any_directory(tmp_path, monkeypatch):
-    monkeypatch.chdir(ROOT)
+def test_workers_import_the_package_from_any_directory(tmp_path):
     env, conf = bench.spark_settings(str(tmp_path))
     assert env["PYTHONPATH"].split(os.pathsep)[0] == ROOT
     assert env["TMPDIR"].startswith(str(tmp_path))
@@ -59,7 +67,7 @@ def _run(tmp_path, trace: int, expected: str) -> tuple[dict, list[str]]:
     out = subprocess.run(
         [sys.executable, os.path.join(HERE, "run.py"), "--workload", "olap_sf001",
          "--seed", "3", "--seconds", "1", "--trace", str(trace), "--expected", expected],
-        cwd=ROOT, capture_output=True, text=True, timeout=600,
+        cwd=tmp_path, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     lines = out.stdout.strip().splitlines()
