@@ -27,7 +27,11 @@ from big_data_projects_spark.queries import REGISTRY  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from big_data_projects_spark.pipeline import songplays_pipeline
+    from big_data_projects_spark.session import ensure_runtime_conf
 
+    # The pipeline is also the body of q_flagship_star_rollup, whose
+    # conf the registry wrapper sets; this entry point sets its own.
+    ensure_runtime_conf(spark)
     return songplays_pipeline(spark, "/root/testdata/sf0.001")
 
 

@@ -253,7 +253,7 @@ def main() -> None:
     from big_data_projects_spark.session import ensure_runtime_conf, get_spark
     from big_data_projects_spark.queries import REGISTRY
 
-    spark = get_spark(app_name="bdp-bench", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark(app_name="bdp-bench", cpus=cpus)
 
     # Warm the JVM/IO path outside measurement.  A bare parquet count()
     # is answered from footer metadata without touching data pages, so
@@ -298,8 +298,9 @@ def main() -> None:
         dt = time.perf_counter() - t0
         # Conf hygiene: a builder that overrides session confs for its
         # own plan (q_bloom_filter_join, q_bucketed_join) relies on the
-        # NEXT builder's ensure_runtime_conf; restoring here bounds the
-        # leak even for the last query of the run.
+        # registry wrapper's ensure_runtime_conf before the next build;
+        # the bench runs the raw builders, so it restores here, which
+        # also bounds the leak for the last query of the run.
         ensure_runtime_conf(spark)
         return dt
 

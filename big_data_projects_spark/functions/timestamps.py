@@ -48,7 +48,7 @@ def epoch_ms(col: Column | str) -> Column:
 
     Accepts TIMESTAMP and TIMESTAMP_NTZ (parquet timestamps not marked
     UTC-adjusted arrive as NTZ); the cast interprets NTZ wall-clock in
-    the session timezone, which every query pins to UTC
+    the session timezone, which the registry wrapper pins to UTC
     (ensure_runtime_conf) — exactly the UTC-naive oracle convention.
     """
     c = F.col(col) if isinstance(col, str) else col

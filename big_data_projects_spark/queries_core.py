@@ -10,7 +10,6 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_projects_spark.data import load_table
@@ -32,12 +31,6 @@ from big_data_projects_spark.operators.relational import (
 )
 from big_data_projects_spark.operators.sessionize import sessionize
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -54,7 +47,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q_scan_project_rename(spark, sf_dir):
     """P1+P2: select + rename chains (transform-data.py:100-106)."""
     return project_rename(
-        _t(spark, sf_dir, "customer"),
+        load_table(spark, sf_dir, "customer"),
         {"c_custkey": "cust_id", "c_name": "cust_name", "c_mktsegment": "segment"},
     )
 
@@ -68,7 +61,7 @@ def q_scan_project_rename(spark, sf_dir):
 def q_filter_eq(spark, sf_dir):
     """P5: equality filter (page='NextSong', transform-data.py:124)."""
     return (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "click")
         .select("event_id", "user_id", "value")
     )
@@ -83,7 +76,7 @@ def q_filter_eq(spark, sf_dir):
 def q_filter_neq(spark, sf_dir):
     """P6: inequality predicate (userId != '', transform-data.py:156)."""
     return (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") != "BUILDING")
         .select("c_custkey", "c_mktsegment")
     )
@@ -101,7 +94,7 @@ def q_fillna(spark, sf_dir):
     """P7: per-column null defaulting (fillna, transform-data.py:97-98).
     Testdata has no nulls, so nulls are introduced (negative balances →
     NULL) and then filled — exercising the same fillna path."""
-    df = _t(spark, sf_dir, "customer").select(
+    df = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.when(F.col("c_acctbal") < 0, None)
         .otherwise(F.col("c_acctbal"))
@@ -120,7 +113,7 @@ def q_cast(spark, sf_dir):
     """P4: double→long cast (registration cast, transform-data.py:132).
     Spark's double→long truncates toward zero; DuckDB's rounds, so the
     oracle truncs explicitly."""
-    return _t(spark, sf_dir, "events").select(
+    return load_table(spark, sf_dir, "events").select(
         "event_id", F.col("value").cast("long").alias("value_long")
     )
 
@@ -134,7 +127,7 @@ def q_cast(spark, sf_dir):
 def q_dedup(spark, sf_dir):
     """P8+P9: projected dropDuplicates (transform-data.py:100,106,138)."""
     return dedup_rows(
-        _t(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
+        load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
     )
 
 
@@ -151,7 +144,7 @@ def q_dedup(spark, sf_dir):
 def q_groupby_count(spark, sf_dir):
     """A1: listens-per-user analogue. Catalyst plans partial+final hash
     aggregation (map-side combine) — one shuffle on user_id."""
-    return grouped_count(_t(spark, sf_dir, "events"), ["user_id"], "n_events")
+    return grouped_count(load_table(spark, sf_dir, "events"), ["user_id"], "n_events")
 
 
 @register(
@@ -183,7 +176,7 @@ def q_tpch_q1(spark, sf_dir):
     # no-op at real scale — see spread_small_scan; r12 optimization:
     # fresh-plan A/B 2.9 s → 1.2 s for the same shape).
     li = spread_small_scan(
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") <= "2000-01-01")
         .select(
             "l_returnflag", "l_linestatus", "l_quantity",
@@ -223,7 +216,7 @@ def q_join_agg_agg(spark, sf_dir):
     """J1: inner join of two filtered aggregates (paid×free users,
     transform-data.py:152-157). Post-aggregation inputs are small →
     AQE converts to broadcast join at runtime."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     purchases = grouped_count(
         events.filter(F.col("event_type") == "purchase"), ["user_id"], "purchase_count"
     )
@@ -254,7 +247,7 @@ def q_join_agg_agg(spark, sf_dir):
 def q_join_dim_report(spark, sf_dir):
     """J2: dim × report join + DISTINCT (transform-data.py:161-165)."""
     report = q_join_agg_agg(spark, sf_dir)
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     return (
         customer.join(report, customer.c_custkey == report.user_id, "inner")
         .select(
@@ -288,11 +281,11 @@ def q_join_multiway(spark, sf_dir):
     Physical strategy: nation/region broadcast explicitly; the
     lineitem⋈orders join is the only large shuffle; AQE handles
     customer (broadcast at small SF, shuffle at scale)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
 
     joined = (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -327,7 +320,7 @@ def q_time_dim(spark, sf_dir):
     used a local-tz Python UDF; this is UTC-pinned JVM code). Spark
     weekofyear is ISO-8601 = DuckDB week; Spark dayofweek is 1=Sunday =
     DuckDB dayofweek+1."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     cols = [epoch_ms("ts").alias("start_ms")] + [
         fn(F.col("ts")).alias(name) for name, fn in CALENDAR_COLS.items()
     ]
@@ -344,8 +337,8 @@ def q_time_dim(spark, sf_dir):
 def q_concat(spark, sf_dir):
     """F3: string concat with literal separator (full_name,
     transform-data.py:162) via concat_ws."""
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return nation.join(
         F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
     ).select(
@@ -370,7 +363,9 @@ def q_row_number(spark, sf_dir):
     SURVEY.md §2.5). Note: a global row_number is inherently single-
     partition; at scale use q_mono_id / zipWithIndex instead."""
     return surrogate_key(
-        _t(spark, sf_dir, "events").select("event_id"), name="rn", order_by="event_id"
+        load_table(spark, sf_dir, "events").select("event_id"),
+        name="rn",
+        order_by="event_id",
     )
 
 
@@ -379,7 +374,9 @@ def q_mono_id(spark, sf_dir):
     """F4: monotonically_increasing_id — the scale-safe surrogate key
     (unique, non-consecutive, no shuffle; transform-data.py:290)."""
     return surrogate_key(
-        _t(spark, sf_dir, "events").select("event_id"), name="mono_id", order_by=None
+        load_table(spark, sf_dir, "events").select("event_id"),
+        name="mono_id",
+        order_by=None,
     )
 
 
@@ -399,7 +396,7 @@ def q_top_k_per_group(spark, sf_dir):
     ranks in its own partition; no global sort). Deterministic tiebreak
     on event_id."""
     return top_k_per_group(
-        _t(spark, sf_dir, "events").select("user_id", "event_id", "value"),
+        load_table(spark, sf_dir, "events").select("user_id", "event_id", "value"),
         keys=["user_id"],
         order=[F.col("value").desc(), F.col("event_id")],
         k=3,
@@ -429,7 +426,7 @@ def q_top_k_per_group(spark, sf_dir):
 def q_sessionize(spark, sf_dir):
     """Gap-based sessionization (30-min inactivity): lag + running-sum
     windows, one shuffle on user_id."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     s = sessionize(events, "user_id", "ts", gap_seconds=1800, tiebreak_col="event_id")
     return s.groupBy("user_id").agg(
         F.max("session_id").alias("n_sessions"),
@@ -451,8 +448,8 @@ def q_asof_join(spark, sf_dir):
     at-or-before the event. Spark lacks a native ASOF JOIN; this is the
     union-of-tagged-streams + last_value(ignore nulls) composition
     (operators/asof.py) — one shuffle, no broadcast requirement."""
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    od = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    od = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
     joined = asof_join(
         ev, od, left_on="user_id", right_on="o_custkey",
         left_time="ts", right_time="o_orderdate", how="inner",
@@ -478,7 +475,7 @@ def q_sink_parquet_partitioned(spark, sf_dir):
     transform-data.py:325-327) with a read-back check: the partition
     columns come back via directory layout, and partition pruning
     applies on re-read."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     out = os.path.join(tempfile.mkdtemp(prefix="bdp_sink_"), "events_parquet")
     (
         events.withColumn("year", F.year("ts"))
@@ -506,7 +503,7 @@ def q_sink_csv_roundtrip(spark, sf_dir):
     """S1+S5: header'd CSV sink (transform-data.py:333-335) + schema'd
     CSV scan (transform-data.py:33-41) round trip. Java's double
     formatting is shortest-roundtrip, so values survive exactly."""
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     out = os.path.join(tempfile.mkdtemp(prefix="bdp_csv_"), "customer_csv")
     customer.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.csv(out, header=True, schema=customer.schema)
@@ -528,7 +525,7 @@ def q_sink_orc_roundtrip(spark, sf_dir):
     read-back, aggregated after the round trip. ORC is the other
     splittable columnar format a lake engine must speak; same
     predicate-pushdown/column-pruning machinery applies on scan."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     out = os.path.join(tempfile.mkdtemp(prefix="bdp_orc_"), "orders_orc")
     orders.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
@@ -598,7 +595,6 @@ def q_sql_entry_report(spark, sf_dir):
     classes) composed with the J2 dim join + DISTINCT report, and the
     F3 string concat. Identical Catalyst pipeline to the DataFrame API
     from the analyzer onward; SQL text is the only difference."""
-    ensure_runtime_conf(spark)
     from big_data_projects_spark.data import register_views
 
     register_views(spark, sf_dir, ("events", "customer"))
@@ -643,8 +639,7 @@ def q_ctas_insert(spark, sf_dir):
     to parallelize across jobs at scale."""
     import uuid
 
-    ensure_runtime_conf(spark)
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("orders_src")
     tbl = f"bdp_ctas_{uuid.uuid4().hex[:8]}"
     spark.sql(
@@ -683,8 +678,8 @@ def q_sink_json_roundtrip(spark, sf_dir):
     the re-read passes the explicit schema — never inference, which
     at scale costs an extra full pass and can mistype sparse
     columns."""
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     joined = customer.join(
         nation, customer.c_nationkey == nation.n_nationkey
     ).select("n_name", "c_acctbal")

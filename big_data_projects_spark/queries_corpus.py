@@ -16,12 +16,6 @@ from big_data_projects_spark.data import load_table
 from big_data_projects_spark.operators import dedup as D
 from big_data_projects_spark.operators import text as T
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark, sf_dir, name):
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 CHUNK = 32  # tokens per training chunk
@@ -48,7 +42,7 @@ def q_doc_chunking(spark, sf_dir):
     per-token — rows out = sum(ceil(len/CHUNK)), not sum(len) — and
     slice/array_join stay in codegen. Per-row independent → embarrass-
     ingly parallel at 100 TB, no shuffle at all."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n_chunks = F.ceil(F.size("t") / F.lit(float(CHUNK))).cast("int")
     start = F.col("chunk_id") * CHUNK + 1
     return (
@@ -119,7 +113,7 @@ def q_contamination(spark, sf_dir):
     train-sized exchange for the same arithmetic. The ratio is
     bigint/bigint → IEEE double, identical cross-engine.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh = D.shingles(docs, "doc_id", "text", 3).persist()
     is_eval = F.col("doc_id") % 10 == 0
     eval_sh = (
@@ -181,7 +175,7 @@ def q_pii_redact(spark, sf_dir):
     engines redact. Pure per-row regexp in codegen — no UDF, no
     shuffle; Spark regexp_replace is global-by-default, DuckDB needs
     the 'g' flag (a classic cross-engine trap, pinned here)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     raw = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -225,7 +219,7 @@ def q_stratified_sample(spark, sf_dir):
     oracle recomputes it), and composable with q_hash_split's buckets
     (same md5-prefix scheme). Row-level output so the oracle checks
     exact membership, not just rates."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long")
@@ -287,7 +281,7 @@ def q_sequence_packing(spark, sf_dir):
     anti-pattern (SURVEY.md §4) this query exists to avoid."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         F.size(T.tokens("text")).cast("long").alias("n"),
@@ -343,7 +337,7 @@ def q_mode_per_group(spark, sf_dir):
     stages shuffle once on bounded-cardinality keys."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -382,7 +376,7 @@ def q_domain_mix(spark, sf_dir):
     q_stratified_sample) when assembling a training mix. One bounded
     aggregate plus a 1-row broadcast total; the weight is an exact
     bigint ratio rounded to 10 decimals."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     s = docs.select("source", F.size(T.tokens("text")).alias("nt")).groupBy(
         "source"
     ).agg(F.sum("nt").alias("n_tokens"))
@@ -426,7 +420,7 @@ def q_weighted_sample(spark, sf_dir):
     (TakeOrderedAndProject, never a global sort). Determinism: u is an
     md5-derived 52-bit uniform (portable), ln washed by round-to-12
     BEFORE ranking with doc_id tie-break."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13), 16, 10)
         .cast("long")
@@ -490,7 +484,7 @@ def q_quality_percentile(spark, sf_dir):
     values."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     scored = T.quality_features(docs).select(
         "doc_id", F.round("quality_score", 10).alias("quality_score")
     )
@@ -574,7 +568,7 @@ def q_line_dedup(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n_lines = F.ceil(F.size("t") / F.lit(float(LINE))).cast("int")
     start = F.col("line_id") * LINE + 1
     lines = (
@@ -650,7 +644,7 @@ def q_vocab_build(spark, sf_dir):
         sharded_row_number,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tf = (
         docs.select(F.explode(T.tokens("text")).alias("token"))
         .groupBy("token")
@@ -695,7 +689,7 @@ def q_zscore_per_group(spark, sf_dir):
     row; the float math is the identical IEEE expression tree on both
     engines, so even the z doubles hash-match. Never a global window:
     the stats relation is group-cardinality-sized and broadcasts."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     g = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("n_chars").cast("double").alias("s1"),
@@ -750,7 +744,7 @@ def q_gopher_rules(spark, sf_dir):
     scoring. Per-row arithmetic over the token array, all in codegen
     (no explode, no shuffle, no UDF) — embarrassingly parallel at any
     scale. Exact-int sums divided once keep doubles engine-identical."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", T.tokens("text").alias("__t"))
     n_words = F.size("__t").cast("long")
     total_len = F.aggregate(
@@ -839,7 +833,7 @@ def q_incremental_dedup(spark, sf_dir):
     hot-shingle cap as q_ngram_jaccard keeps boilerplate from going
     quadratic). New docs come out tagged exact_dup / near_dup / kept;
     only the batch is scanned twice, the corpus once per stage."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     new_pred = F.col("doc_id") % 4 == 0
     newb = docs.filter(new_pred)
     old = docs.filter(~new_pred)
@@ -910,7 +904,7 @@ def q_token_histogram(spark, sf_dir):
     STRING length of the count (exact integer MSB position), never
     floor(log2(x)) whose float rounding can misbucket exact powers of
     two cross-engine. Per-row arithmetic + one tiny aggregation."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(T.tokens("text")).cast("long")
     return (
         docs.select(n_tok.alias("n_tokens"))
@@ -992,7 +986,7 @@ def q_quality_ensemble(spark, sf_dir):
     over text beyond its members'."""
     from big_data_projects_spark.queries import REGISTRY
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = T.tokens("text")
     n_words = F.size(t).cast("long")
     total_len = F.aggregate(
@@ -1051,7 +1045,7 @@ def q_url_parse(spark, sf_dir):
     re-derives the identical pieces with portable regex — so the
     builtin's semantics are themselves under test. Pure per-row
     codegen, no shuffle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://www."), F.col("source"), F.lit(".example.com/docs/"),
         F.col("doc_id").cast("string"), F.lit("?lang="), F.col("lang"),
@@ -1103,7 +1097,7 @@ def q_html_strip(spark, sf_dir):
     non-greedy script pattern and global-replace flags are the classic
     cross-engine traps, pinned here. Per-row regex in codegen —
     embarrassingly parallel."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     html = F.concat(
         F.lit("<html><body><h1>doc "), F.col("doc_id").cast("string"),
         F.lit("</h1><p>"), F.col("text"),
@@ -1164,7 +1158,7 @@ def q_oov_rate(spark, sf_dir):
     (TakeOrderedAndProject over the TYPE table — never a global sort
     of tokens) and joined back as a broadcast-sized membership probe;
     the per-doc rate is exact-int division."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(T.tokens("text")).alias("w"))
     vocab = (
         toks.groupBy("w")
@@ -1249,7 +1243,7 @@ def q_pipeline_web_corpus(spark, sf_dir):
     shape: per-row regex/codegen for clean+rules, ONE hash-partitioned
     min-window on the content fingerprint for dedup, one final
     aggregation; text shuffles once (fingerprint), never pairwise."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
     html = F.concat(
@@ -1357,7 +1351,7 @@ def q_upsample_mix(spark, sf_dir):
     one small aggregate+broadcast, so the only shuffle is over the
     per-source mass table (≤ #sources rows); at 100 TB the fan-out
     writes stream straight to the sink."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source", F.size(T.tokens("text")).cast("long").alias("nt")
     )
@@ -1441,7 +1435,7 @@ def q_length_batching(spark, sf_dir):
         sharded_row_number,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     keyed = (
         docs.select(
             "doc_id", F.size(T.tokens("text")).cast("long").alias("nt")
@@ -1502,7 +1496,7 @@ def q_global_shuffle(spark, sf_dir):
         sharded_row_number,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id", "source",
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":7"))).alias(
@@ -1553,7 +1547,7 @@ def q_skipgram_pairs(spark, sf_dir):
     result is a TakeOrderedAndProject top-k, never a global sort. The
     oracle states the same pairs as a positional self-join, which is
     fine at oracle scale and exactly what the lambda avoids at 100 TB."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(T.tokens("text").alias("t"))
     pairs = toks.select(
         F.explode(
@@ -1624,7 +1618,7 @@ def q_dup_span(spark, sf_dir):
     join; hot boilerplate shingles can reuse the same df-cap if they
     ever skew. All outputs are exact integers plus one final double
     division, so the oracle hash-matches."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", T.tokens("text").alias("t"))
     k = _SPAN_K
     spans = toks.where(F.size("t") >= k).select(

@@ -32,12 +32,6 @@ from pyspark.sql import functions as F
 from big_data_projects_spark.data import load_table
 from big_data_projects_spark.operators import text as T
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark, sf_dir, name):
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 DSIR_BUCKETS = 128  # hashed feature space (Xie et al. use 10k; 128 keeps
@@ -101,7 +95,7 @@ def q_dsir_weights(spark, sf_dir):
     The decimal fold is exact integer-scaled addition (order-free), so
     the in-row sequential fold is bit-identical to the former
     shuffle-ordered SUM.  No driver collect, no window."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bkt_sql = (
         f"CAST(conv(substring(md5({{t}}), 1, 8), 16, 10) AS BIGINT) "
         f"% {DSIR_BUCKETS}"
@@ -212,7 +206,7 @@ def q_char_entropy(spark, sf_dir):
     per-(doc, char) groupBy map-side combines to ≤ |alphabet| rows per
     doc before the doc-keyed shuffle), then one doc-keyed sum. No
     window, no collect."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     ch = docs.select("doc_id", F.explode(F.split("text", "")).alias("c"))
     k = (
         ch.filter(F.col("c") != "")
@@ -312,7 +306,7 @@ def q_trigram_backoff(spark, sf_dir):
 
     At 100 TB: everything is token-keyed joins with map-side-combined
     counts; the holdout slice is a filter pushed to the scan."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
     toks = docs.select(
@@ -450,7 +444,7 @@ def q_pca_variance(spark, sf_dir):
     bounded-actions pattern)."""
     import numpy as np
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").first()[0])
     from big_data_projects_spark.data import spread_small_scan
 
@@ -651,7 +645,7 @@ def q_bt_reward(spark, sf_dir):
         sharded_row_number,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     r = sharded_row_number(
         docs.select("doc_id", "source", "n_chars"),
         [F.col("n_chars"), F.col("doc_id")],
@@ -833,7 +827,7 @@ def q_rouge_overlap(spark, sf_dir):
     the join keys are (doc, bigram) for exactly 2·|sources| docs —
     the candidate set is bounded by the pair table, and AQE broadcasts
     the picked-pair relation."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "source", "n_chars", T.tokens("text").alias("t")
     )
@@ -944,7 +938,7 @@ def q_span_corruption(spark, sf_dir):
     n/3, combined map-side), the mask bit is a hash expression, the
     summary one doc-keyed groupBy. No joins, no windows, no
     collect."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", F.size(T.tokens("text")).alias("n")
     )
@@ -1036,7 +1030,7 @@ def q_ngram_novelty(spark, sf_dir):
     it fits; at 100 TB this is the same df-capped shingle-join shape
     as q_ngram_jaccard — the join fans out only by each doc's own
     bigram count."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", T.tokens("text").alias("t"))
     bigrams = F.zip_with(
         F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))),
@@ -1115,7 +1109,7 @@ def q_zipf_fit(spark, sf_dir):
     At 100 TB the term-count groupBy is the only corpus-scale stage
     (map-side combined); everything after the top-1000 cut is
     constant work."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
     toks = docs.select(F.explode(T.tokens("text")).alias("term"))
@@ -1264,7 +1258,7 @@ def q_lsh_quality(spark, sf_dir):
     pair relations, no separate count jobs — r13)."""
     from big_data_projects_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh = D.shingles(docs, "doc_id", "text", hasher="md5").persist()
     # Materialize the shared shingle cache ONCE, eagerly, before both
     # pipelines plan against it (r13): in the single-action shape below
@@ -1431,7 +1425,7 @@ def q_minhash_est(spark, sf_dir):
     only ever from band buckets."""
     from big_data_projects_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh = D.shingles(docs, "doc_id", "text", hasher="md5").persist()
     pairs = D.minhash_lsh_pairs(
         docs, threshold=0.1, hasher="md5", shingle_df=sh
@@ -1513,7 +1507,7 @@ def q_length_kl(spark, sf_dir):
     One corpus scan → two keyed count aggregates (per-(source,bin),
     per-bin) — both map-side combined to ≤ |sources|×8 cells — then
     control-plane-sized grid joins. No window, no collect."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "source",
         F.least(
@@ -1595,7 +1589,7 @@ def q_tokenizer_fertility(spark, sf_dir):
     one broadcast-able doc→lang join and a |langs|-row aggregate."""
     from big_data_projects_spark.queries_llm import _bpe_fit
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     merges, final_words, handles = _bpe_fit(docs)
     for df in handles:
         if df is not final_words:
@@ -1669,7 +1663,7 @@ def q_embed_centroid_shift(spark, sf_dir):
     One posexplode pass → one (label, half, pos)-keyed map-side-
     combined aggregate (≤ |labels|×2×dim cells) — everything after is
     control-plane sized. No window, no collect."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "label",
         (F.col("vec_id") % 2).alias("half"),
@@ -1774,7 +1768,7 @@ def q_quality_calibration(spark, sf_dir):
     map-side-combined aggregate. No window, no collect, no join."""
     from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", T.tokens("text").alias("__t"))
     score = F.aggregate(
         F.transform(
@@ -1873,7 +1867,7 @@ def q_lang_confusion(spark, sf_dir):
     construction. All counts exact; one rounded share."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     p = docs.select("lang", T.predict_lang("text").alias("pred_lang"))
     cell = p.groupBy("lang", "pred_lang").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -1973,7 +1967,7 @@ def q_dedup_cluster_stats(spark, sf_dir):
     )
     from big_data_projects_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     edges = D.ngram_jaccard_pairs(docs, threshold=0.1).select(
         "doc_a", "doc_b"
     )
@@ -2063,7 +2057,7 @@ def q_simhash_hamming_hist(spark, sf_dir):
     rows."""
     from big_data_projects_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh = D.simhash(docs, "doc_id", "text")
     seg_bits = D.SIMHASH_BITS // D.SIMHASH_SEGMENTS
     mask = (1 << seg_bits) - 1
@@ -2216,7 +2210,7 @@ def q_graph_modularity(spark, sf_dir):
     )
     from big_data_projects_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # Both shared relations are control-plane sized (hundreds of rows)
     # yet land spread over shuffle-partition-many partitions; coalesce
     # before the 4-branch fan-out so every downstream stage runs a
@@ -2332,7 +2326,7 @@ def q_ngram_entropy_rate(spark, sf_dir):
     self-join), one (context, bigram) groupBy map-side combined, one
     context rollup, one broadcast scalar — the q_kn_bigram_ppl count
     shapes without the scoring join."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(T.tokens("text").alias("t"))
     bg = t.select(
         F.explode(
@@ -2447,7 +2441,7 @@ def q_pass_at_k(spark, sf_dir):
     At 100 TB: one groupBy to the problem-sized (n, c) table, then
     three scalar aggregates over it — no joins, no windows, no
     collect."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     s = docs.select(
         (
             F.conv(
@@ -2559,7 +2553,7 @@ def q_cross_source_leakage(spark, sf_dir):
     machinery."""
     from big_data_projects_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(docs, threshold=0.1).select(
         "doc_a", "doc_b"
     )
@@ -2642,7 +2636,7 @@ def q_annotator_agreement(spark, sf_dir):
 
     At 100 TB: one map-side-combined conditional-sum aggregate to a
     single row — no shuffle beyond the 1-row combine, no collect."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     r = docs.select(
         F.when(F.size(T.tokens("text")) >= 40, 1).otherwise(0).alias("a"),
         F.when(F.col("n_chars") >= 220, 1).otherwise(0).alias("b"),
@@ -2842,7 +2836,7 @@ def q_ivf_probe_recall(spark, sf_dir):
     from pyspark.sql import Window
     from big_data_projects_spark.operators import similarity as S
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     panel = (
         emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(20)
@@ -3014,7 +3008,7 @@ def q_dedup_threshold_sweep(spark, sf_dir):
     that relation (the distinct-doc count shuffles doc ids only)."""
     from big_data_projects_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # localCheckpoint, not persist: six count branches (two per sweep
     # point) would each re-analyze the full shingle-join lineage per
     # action (the q_graph_modularity round-9 finding; ~20% here).
@@ -3112,7 +3106,7 @@ def q_pii_prevalence(spark, sf_dir):
     shape."""
     from big_data_projects_spark.queries_corpus import EMAIL_RE, PHONE_RE
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                16, 10).cast("long")
@@ -3314,7 +3308,7 @@ def q_quality_lr_train(spark, sf_dir):
     corpus passes total, no window, no collect, no iteration."""
     from big_data_projects_spark.queries_corpus import GOPHER_STOPWORDS
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", T.tokens("text").alias("__t"))
     n_words = F.size("__t").cast("long")
     total_len = F.aggregate(
@@ -3528,7 +3522,7 @@ def q_filter_ablation(spark, sf_dir):
         PHONE_RE,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text", T.tokens("text").alias("__t"))
     n_words = F.size("__t").cast("long")
     total_len = F.aggregate(
@@ -3714,7 +3708,7 @@ def q_dedup_survivor_bias(spark, sf_dir):
     rollups."""
     from big_data_projects_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(docs, threshold=SURVIVOR_THRESHOLD)
     drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     tk = docs.select(
@@ -3889,7 +3883,7 @@ def q_split_leakage(spark, sf_dir):
     """
     from big_data_projects_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = (
         D.ngram_jaccard_pairs(docs, threshold=0.1)
         .select("doc_a", "doc_b")
@@ -4024,7 +4018,7 @@ def q_encoding_audit(spark, sf_dir):
     At 100 TB: per-row codegen string predicates (contains + two
     regexes, no UDF), one source-keyed map-side-combined aggregate —
     the q_dataset_report shape; output is |sources| rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                16, 10).cast("long")
@@ -4168,7 +4162,7 @@ def q_sft_turn_audit(spark, sf_dir):
     transforms + exists, all JVM-side expressions (no UDF, no
     explode: turn arrays never leave the row) — then ONE source-keyed
     map-side-combined aggregate; output is |sources| rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                16, 10).cast("long")
@@ -4338,7 +4332,7 @@ def q_vocab_growth(spark, sf_dir):
     the tiny broadcast source dim — no global-sort window anywhere,
     and the oracle mirrors the same join-based cumsum so both engines
     state identical arithmetic)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(T.tokens("text")).alias("term")
     )
@@ -4535,7 +4529,7 @@ def q_code_switch_audit(spark, sf_dir):
     source-keyed map-side-combined aggregate; output is |sources|
     rows.  Window scoring costs ~5 regex passes over corpus bytes —
     proportional to scan cost by construction."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = CS_WINDOW_TOKENS
     h = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),

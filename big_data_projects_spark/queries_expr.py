@@ -15,19 +15,13 @@ from typing import Iterator  # noqa: F401  (resolved by pandas_udf hints)
 
 import pandas as pd  # module-level so Iterator-UDF type hints resolve
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from big_data_projects_spark.data import load_table
 from big_data_projects_spark.functions.timestamps import epoch_ms
 from big_data_projects_spark.operators.relational import dsum
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +44,7 @@ def q_json_extract(spark, sf_dir):
     aggregation. get_json_object is a Catalyst built-in (no UDF); at
     scale prefer from_json with an explicit schema once per column —
     both stay JVM-side."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return ev.groupBy("event_type").agg(
         F.sum(k).alias("k_sum"), F.count(k).alias("k_present")
@@ -77,7 +71,7 @@ def q_explode_terms(spark, sf_dir):
     """Row generator: split → explode → re-aggregate (the word-count
     shape). The explode happens map-side (no shuffle until the term
     groupBy, which partially aggregates before exchanging)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(
             F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("term")
@@ -106,7 +100,7 @@ def q_explode_terms(spark, sf_dir):
 def q_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (mixed granularities in one pass; Spark
     expands to a single expand+aggregate — one shuffle total)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupingSets(
             [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
@@ -138,7 +132,7 @@ def q_date_arith(spark, sf_dir):
     """Date arithmetic: truncation, month-end clamping (add_months and
     last_day both clamp, matching DuckDB interval semantics), day
     difference, quarter."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         epoch_ms(F.date_trunc("month", "o_orderdate")).alias("month_start_ms"),
@@ -173,7 +167,7 @@ def q_string_funcs(spark, sf_dir):
     """String expression family — all Catalyst built-ins evaluated in
     whole-stage codegen (upper/substring/lpad/regexp_replace/length/
     reverse/replace)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         F.upper("c_name").alias("name_upper"),
@@ -216,7 +210,7 @@ def q_range_join(spark, sf_dir):
     The bucket dim is broadcast, so the non-equi condition is evaluated
     as a BroadcastNestedLoopJoin over 5 rows — no shuffle, no cartesian
     blow-up. At 100 TB the same shape holds for any small band table."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     buckets = ev.sparkSession.createDataFrame(_BUCKETS, ["name", "lo", "hi"])
     return (
         ev.join(
@@ -247,7 +241,7 @@ def q_ntile_cume(spark, sf_dir):
     """Distribution window functions (ntile / percent_rank / cume_dist)
     partitioned by status — per-partition sorts only, no global order.
     Deterministic tiebreak on the unique order key."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     return orders.select(
         "o_orderkey",
@@ -279,7 +273,7 @@ def q_array_ops(spark, sf_dir):
     the scale path for per-row vector math without Python). Elements
     are cast float→double *before* summing on both sides so the
     sequential fold is bit-identical."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
         "vec_id",
         F.size("embedding").alias("dim"),
@@ -314,7 +308,7 @@ def q_max_by(spark, sf_dir):
     tie-deterministic form of max_by (plain max_by/arg_max leaves ties
     unspecified on both engines; packing the tiebreak key into the
     comparison struct pins them). Single hash aggregate, no window."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     s = F.struct(F.col("value").alias("v"), F.col("event_id").alias("id"))
     return ev.groupBy("event_type").agg(
         F.max(s)["id"].alias("top_event_id"),
@@ -338,7 +332,7 @@ def q_map_ops(spark, sf_dir):
     key — the map-typed path (map_keys/map_values/explode) the flat
     reference schema never touches. Integer sums are exact on both
     engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     parsed = ev.select(
         F.from_json("props", "map<string,bigint>").alias("m")
     )
@@ -373,7 +367,7 @@ def q_edit_distance(spark, sf_dir):
     Blocking is the same scale discipline as LSH banding: at 100 TB
     the pair count is sum of per-block squares, tunable via block
     granularity, not corpus-squared."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
         "source",
@@ -420,7 +414,7 @@ def q_try_arith(spark, sf_dir):
     division guards against zero denominators NULL-safely. Under ANSI
     SQL mode (Spark 4 default) the non-try variants would throw —
     try_* is the scale-safe idiom."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").try_cast("long")
     denom = F.col("event_id") % 5
     return ev.select(
@@ -451,7 +445,7 @@ def q_variant_json(spark, sf_dir):
     extraction — at 100 TB the difference between one parse and one
     parse per accessed field. The oracle reads the same paths with
     DuckDB's JSON extraction."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = ev.select(F.parse_json("props").alias("v"))
     k = F.variant_get("v", "$.k", "long")
     return v.select((k % 10).alias("k_bucket"), k.alias("k")).groupBy(
@@ -483,7 +477,7 @@ def q_unpivot(spark, sf_dir):
     rows × measures); the only shuffle is the final bounded-key
     aggregate. The oracle spells it as UNION ALL, which is what the
     operator desugars to relationally."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     melted = li.unpivot(
         ids=[],
         values=["l_quantity", "l_discount", "l_tax"],
@@ -519,7 +513,6 @@ def q_lateral_topn(spark, sf_dir):
     two surfaces (LATERAL SQL and the Window DataFrame idiom) converge
     on one scalable physical shape rather than a per-row re-execution
     of the inner query."""
-    ensure_runtime_conf(spark)
     for t in ("nation", "customer"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
@@ -567,7 +560,6 @@ def q_udtf_spans(spark, sf_dir):
     parallel, no shuffle; Python cost is bounded by Arrow batching."""
     from pyspark.sql.functions import udtf
 
-    ensure_runtime_conf(spark)
     spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
 
     @udtf(returnType="span_id int, span_text string, n_toks int")
@@ -579,7 +571,7 @@ def q_udtf_spans(spark, sf_dir):
                 yield (i // _UDTF_SPAN, " ".join(chunk), len(chunk))
 
     spark.udtf.register("bdp_spans", SpanUDTF)
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("bdp_udtf_docs")
     return spark.sql(
         """
@@ -617,7 +609,7 @@ def q_higher_order_funcs(spark, sf_dir):
     forall, array_sort, transform+array_max, array_position. Per-row
     array work — zero shuffle, embarrassingly parallel; the lambda
     surface is what lets array pipelines stay out of Python."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     from big_data_projects_spark.operators.text import tokens
 
     base = docs.select("doc_id", tokens("text").alias("t"))
@@ -653,7 +645,7 @@ def q_regex_extract_all(spark, sf_dir):
     content not payload), and boolean pattern match. All codegen'd
     Java regex; patterns stay in the Java∩RE2-portable subset
     (same discipline as the BPE pre-tokenizer)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(r"\b[a-z]{5}\b"), F.lit(0)))
@@ -681,7 +673,7 @@ def q_xml_extract(spark, sf_dir):
     reader; the oracle states the expected roundtrip directly, so a
     parser/schema regression (element order, type coercion, nesting)
     breaks the hash match. Codegen expression — no external XML lib."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     xml = F.concat(
         F.lit("<e><t>"), F.col("event_type"),
         F.lit("</t><u>"), F.col("user_id").cast("string"),
@@ -717,7 +709,7 @@ def q_null_semantics(spark, sf_dir):
     NULLs flowing through COUNT's null-skipping — the SQL-null
     contract an engine must get right before any of its aggregates
     can be trusted."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count_if(F.col("l_discount") > 0.05).alias("n_big_disc"),
         F.bool_or(F.col("l_tax") == 0).alias("any_zero_tax"),
@@ -752,7 +744,7 @@ def q_map_lambdas(spark, sf_dir):
     the source columns directly — so the lambda semantics themselves
     (key-conditional rewrite, filter, merge precedence) are what is
     being checked."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     m = F.create_map(
         F.lit("k"), F.get_json_object("props", "$.k"),
         F.lit("type"), F.col("event_type"),
@@ -815,7 +807,7 @@ def q_generator_funcs(spark, sf_dir):
     posexplode as generate_series indexing and stack as a UNION ALL of
     constant-tagged selects; the per-position-bucket distinct-word
     profile checks the ORDINALS, not just the elements."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") <= 100)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 100)
     pos = docs.select(
         "doc_id",
         F.posexplode(F.split(F.trim(F.lower("text")), r"\s+")).alias(
@@ -828,7 +820,7 @@ def q_generator_funcs(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("word").cast("double").alias("val"),
     ).select(F.lit("posexplode").alias("kind"), "k", "n", "val")
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     stacked = part.select(
         F.expr(
             "stack(2, 'size', CAST(p_size AS DOUBLE), "
@@ -873,7 +865,7 @@ def q_collation(spark, sf_dir):
     raw-case variants folded into each group (1 on this data: the
     check that collation grouping didn't merge what byte-equality
     would)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     ci = F.expr("collate(c_mktsegment, 'UTF8_LCASE')")
     return (
         cust.groupBy(ci.alias("seg"))
@@ -930,7 +922,7 @@ def q_scalar_iter_udf(spark, sf_dir):
                 lambda t: len(splitter.split(t.strip(" ").lower()))
             ).astype("int64")
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", tok_count("text").alias("n_toks"))
 
 
@@ -974,7 +966,7 @@ def q_map_in_arrow(spark, sf_dir):
                 [batch.column(0), cents], ["user_id", "cents"]
             )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "value")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
     mapped = ev.mapInArrow(to_cents, "user_id long, cents long")
     return mapped.groupBy("user_id").agg(
         F.sum("cents").alias("total_cents"),
@@ -1033,7 +1025,7 @@ def q_apply_in_arrow(spark, sf_dir):
             ]
         )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "value")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
     return ev.groupBy("user_id").applyInArrow(
         per_user,
         "user_id long, n long, min_cents long, max_cents long,"

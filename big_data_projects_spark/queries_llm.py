@@ -17,12 +17,6 @@ from big_data_projects_spark.operators import multimodal as M
 from big_data_projects_spark.operators import similarity as S
 from big_data_projects_spark.operators import text as T
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark, sf_dir, name):
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 _TOKS = "regexp_split_to_array(trim(lower(text)), '\\s+')"
@@ -42,7 +36,7 @@ _TOKS = "regexp_split_to_array(trim(lower(text)), '\\s+')"
 )
 def q_token_stats(spark, sf_dir):
     """Token counting: whitespace tokenizer, total + distinct counts."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return T.with_token_stats(docs).select("doc_id", "n_tokens", "n_distinct_tokens")
 
 
@@ -72,7 +66,7 @@ def q_lang_id(spark, sf_dir):
     """Language-ID: marker-word n-gram heuristic, deterministic argmax
     with fixed preference order (en,de,fr,es,zh), 'unknown' on zero
     evidence. All JVM regexp_count — no UDF."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", "lang", T.predict_lang("text").alias("pred_lang"))
 
 
@@ -97,7 +91,7 @@ def q_lang_id(spark, sf_dir):
 def q_text_quality(spark, sf_dir):
     """Quality scoring from integer counts (length/punct/stopword
     ratios) — int arithmetic makes the double score engine-portable."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return T.quality_features(docs).select(
         "doc_id", "n_chars_obs", "n_tokens", "n_punct", "n_stopwords", "quality_score"
     )
@@ -122,7 +116,7 @@ def q_bpe_token_count(spark, sf_dir):
     cheap proxy for 'how many model tokens is this document' used in
     token-budget accounting. Pattern restricted to Java-regex ∩ RE2
     constructs so both engines tokenize identically."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(T.tokens("text")).cast("long").alias("n_ws_tokens"),
@@ -163,7 +157,7 @@ def q_winnow_fingerprint(spark, sf_dir):
     per-window minima → distinct selected fingerprints per document.
     See operators/text.py:winnowing_fingerprints for the guarantee and
     the 100 TB shape (explode + doc-partitioned window, no self-join)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return T.winnowing_fingerprints(docs, "doc_id", "text", k=5, w=4)
 
 
@@ -208,7 +202,7 @@ def q_embed_decontaminate(spark, sf_dir):
     sequential JVM fold, bit-identical to DuckDB list_dot_product;
     max_sim rounds to 10 and nulls coalesce to -1 so the hash is
     engine-exact."""
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
@@ -270,7 +264,7 @@ def q_unigram_ppl(spark, sf_dir):
     rounded to 8 so last-ulp libm differences can't leak into the hash.
     At 100 TB: explode + two keyed groupBys + one term-keyed equi-join
     (AQE broadcasts the term table when it fits); no driver collect."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(T.tokens("text")).alias("term"))
     cf = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     tot = (
@@ -314,7 +308,7 @@ def q_unigram_ppl(spark, sf_dir):
 )
 def q_doc_fingerprint(spark, sf_dir):
     """Document fingerprinting: md5 hex + compact 32-bit key."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         T.fingerprint("text").alias("fp"),
@@ -337,7 +331,7 @@ def q_doc_fingerprint(spark, sf_dir):
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup accounting per source: content-hash distinct counts.
     The hash key is uniform → no skew in the distinct shuffle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_total"),
         F.countDistinct(D.content_hash("text")).alias("n_unique"),
@@ -382,7 +376,7 @@ def q_ngram_jaccard(spark, sf_dir):
     """Exact word-3-gram Jaccard pairs (threshold 0.1): the verify
     stage of fuzzy dedup, candidates restricted to pairs sharing a
     shingle (equi-join on shingle hash, never a cross join)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return D.ngram_jaccard_pairs(docs, threshold=0.1)
 
 
@@ -464,7 +458,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     formerly rows-only probabilistic operator now hash-matches its
     oracle end-to-end (the xxh64 mode stays available as the fastest
     production variant; the plan is identical)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_pairs(docs, threshold=0.1, hasher="md5")
 
 
@@ -593,7 +587,7 @@ def q_dedup_merge_ingest(spark, sf_dir):
     verify touches candidates only; output is batch-sized.  Registered
     in md5-portable mode so signatures, banding, candidates, verify,
     and verdict precedence all hash-match the SQL oracle end-to-end."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return D.minhash_merge_ingest(
         docs, _merge_batch_flag, threshold=0.1, hasher="md5"
     )
@@ -625,7 +619,7 @@ def q_simhash_pairs(spark, sf_dir):
     exact hamming filter. The blocking is COMPLETE for the ≤3
     threshold, so the hash-match against the oracle's brute-force pair
     filter verifies both the simhash and the pairing end-to-end."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return D.simhash_near_pairs(D.simhash(docs), max_hamming=3)
 
 
@@ -634,7 +628,7 @@ def q_simhash(spark, sf_dir):
     """60-bit SimHash per document — fully engine-portable (md5-derived
     token hashes fit a signed int64 on both engines, bit-vote
     aggregation), so it IS oracle-checked."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return D.simhash(docs)
 
 
@@ -670,7 +664,7 @@ def q_knn_cosine(spark, sf_dir):
     so even the float sims hash-match. Physical plan: broadcast 1-row
     query, one corpus scan, TakeOrderedAndProject (per-partition
     heaps — no global sort)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.topk_cosine(emb, query_id=0, k=10)
 
 
@@ -687,7 +681,7 @@ def q_knn_cosine(spark, sf_dir):
 def q_embed_neardup(spark, sf_dir):
     """Embedding near-dup pairs within label blocks (blocked exact
     verification — the step after any ANN candidate generation)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.blocked_neardup_pairs(emb, block_col="label", threshold=0.3)
 
 
@@ -732,7 +726,7 @@ def q_knn_ivf(spark, sf_dir):
     accumulated centroid means (the q_embed_outliers pattern) make the
     coarse stage deterministic under any partitioning, so probe
     selection, fine sims, and the top-k all hash-match the oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.ivf_topk(emb, query_id=0, k=10, n_probe=3)
 
 
@@ -885,7 +879,7 @@ def q_ivf_merge_ingest(spark, sf_dir):
     verification, and verdicts hash-match the SQL oracle end-to-end.
     Recall vs the full-rebuild index is pinned in
     tests/test_operators_unit.py."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.ivf_merge_ingest(
         # bits_per_band pinned: the oracle embeds the 8-bit planes as
         # literals, so buckets must be static across engines and SFs.
@@ -952,7 +946,7 @@ def q_embed_lsh_neardup(spark, sf_dir):
     probabilistic operator now hash-matches its oracle end-to-end.
     bits_per_band is pinned at 8 (the width lsh_bits_for derives for
     every driver corpus ≤ 16k vectors) to keep the oracle static."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.lsh_neardup_pairs(emb, dim=64, threshold=0.3, bits_per_band=8)
 
 
@@ -973,7 +967,7 @@ def q_multimodal_bytes(spark, sf_dir):
     """Binary payload carrier: opaque bytes + typed metadata struct.
     The metadata (byte length, digest) is oracle-checked; payloads stay
     opaque exactly as image/audio blobs would."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     wrapped = M.with_binary_payload(docs)
     return wrapped.select(
         "doc_id",
@@ -1032,7 +1026,7 @@ def q_multimodal_decode(spark, sf_dir):
     match. Codec formats (JPEG/MP4) remain honestly stubbed."""
     import struct as _struct
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     md5b = F.unhex(F.md5("text"))
     ppm = F.concat(F.lit(b"P6\n2 2\n255\n"), F.substring(md5b, 1, 12))
     wav_header = (
@@ -1089,7 +1083,7 @@ def q_multimodal_features(spark, sf_dir):
     the Python batch stage is hash-checked end-to-end (formerly
     rows-only). Real PPM/WAV decode features are checked separately by
     q_multimodal_decode; codec-class formats stay stubbed."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     feats = M.extract_features(M.with_binary_payload(docs))
     return feats.select(
         "doc_id", "kind", "n_bytes", "decode_status",
@@ -1154,7 +1148,7 @@ def q_dedup_clusters(spark, sf_dir):
     with a recursive transitive-closure CTE — feasible only at test
     scale, which is exactly why the engine side is the iterative join
     form."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     edges = D.ngram_jaccard_pairs(docs, threshold=0.1).select("doc_a", "doc_b")
     comps = connected_components(edges, src="doc_a", dst="doc_b")
     return comps.groupBy(F.col("comp").alias("cluster_id")).agg(
@@ -1194,7 +1188,7 @@ def q_tfidf_top_terms(spark, sf_dir):
     (and the emitted value) cannot depend on last-ulp ln() differences
     between engines. The doc-count scalar joins in as a 1-row broadcast,
     never a driver-side collect."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(T.tokens("text")).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -1269,7 +1263,7 @@ def q_bm25(spark, sf_dir):
     anything, broadcast joins for the scalar/dim sides."""
     terms = ("join", "shuffle", "vector")
     k1, b = 1.2, 0.75
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(T.tokens("text")).alias("term"))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
@@ -1345,7 +1339,7 @@ def q_embed_outliers(spark, sf_dir):
     in DECIMAL(38,10), so both are partition-order independent; the
     distance is rounded to 8 decimals before ranking. Shuffles are keyed
     by (label, position) and vec_id — both uniform."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     pos = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos0", "vf")
     ).select(
@@ -1478,7 +1472,7 @@ def q_pipeline_corpus_clean(spark, sf_dir):
     query checks their composition against one oracle. The fuzzy stage
     only ever joins on shingle/doc ids — the pair blow-up bound and
     shuffle keys are identical to q_ngram_jaccard's."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     feats = T.quality_features(docs)
     survivors = (
         feats.withColumn("pred_lang", T.predict_lang("text"))
@@ -1539,7 +1533,7 @@ def q_hash_split(spark, sf_dir):
     corpus is partitioned reproducibly: no RNG state, stable under
     re-runs and resharding, and any engine can recompute membership —
     which is exactly what the oracle does."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(
             F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
@@ -1574,7 +1568,7 @@ def q_multimodal_resize(spark, sf_dir):
     is hash-checked end-to-end (formerly rows-only). Real pixel
     resampling for P6 images is checked by unit test (decode side by
     q_multimodal_decode); codec formats stay stubbed."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     binary = M.with_binary_payload(docs)
     resized = M.resize_payload(binary, width=64, height=32)
     return resized.select(
@@ -1614,7 +1608,7 @@ def q_multimodal_frames(spark, sf_dir):
     verified: the oracle recomputes the same byte-slices from the
     UTF-8 text and compares md5s per (doc, frame) — the 1→N Arrow
     fan-out is hash-checked end-to-end (formerly rows-only)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     binary = M.with_binary_payload(docs)
     frames = M.sample_frames(binary, n_frames=3, fps=2.0)
     return frames.select(
@@ -1655,7 +1649,7 @@ def q_data_quality(spark, sf_dir):
     operators.quality.split_quarantine peels the failing rows."""
     from big_data_projects_spark.operators.quality import violations_summary
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     rules = [
         ("text_not_null", F.col("text").isNotNull()),
         ("n_chars_positive", F.col("n_chars") >= 1),
@@ -1694,7 +1688,7 @@ def q_kmeans_clusters(spark, sf_dir):
     a broken assign or update flips it). All checks are aggregates —
     a few extra shuffles over the 500-row corpus, same plan shape at
     any scale."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     k = 8
     assignments = S.kmeans_assign(emb, k=k, n_iter=2)
     joined = emb.join(assignments, "vec_id")
@@ -1774,7 +1768,7 @@ def q_knn_batch(spark, sf_dir):
     of integer-valued doubles below 2**53 are exact on the oracle side
     too. The float-matmul production mode remains the default of
     batch_topk_matmul."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.batch_topk_matmul(
         emb, query_ids=list(range(8)), k=5, exact_int=True
     )
@@ -1843,7 +1837,7 @@ def q_dedup_keep_best(spark, sf_dir):
     key), instead of the arbitrary min-id of q_dedup_clusters. This is
     the policy real corpus dedup uses: keep the longest/cleanest
     variant, drop the rest."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     edges = D.ngram_jaccard_pairs(docs, threshold=0.1).select("doc_a", "doc_b")
     comps = connected_components(edges, src="doc_a", dst="doc_b")
     qual = docs.select(
@@ -1959,7 +1953,7 @@ def q_pagerank_sim_graph(spark, sf_dir):
     so the hash-match stays bit-for-bit."""
     from big_data_projects_spark.operators.graph import pagerank_units
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.1)
     edges = pairs.select("doc_a", "doc_b")
     return pagerank_units(edges, "doc_a", "doc_b", iterations=5).select(
@@ -1998,7 +1992,7 @@ def q_triangle_count(spark, sf_dir):
     DuckDB."""
     from big_data_projects_spark.operators.graph import triangle_count
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pairs = (
         li.alias("x")
         .join(
@@ -2052,7 +2046,7 @@ def q_bigram_pmi(spark, sf_dir):
     to 10 decimals so last-ulp ln() differences can't leak. The two
     corpus totals join in as 1-row broadcasts; the only data-scale
     shuffles are the bigram/unigram count aggregates."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(T.tokens("text").alias("t"))
     bi = (
         toks.filter(F.size("t") >= 2)
@@ -2152,7 +2146,7 @@ def q_recursive_reachability(spark, sf_dir):
     operator, which dedups per round. The similarity pairs are built
     by the same DataFrame operator q_ngram_jaccard checks, exposed to
     SQL as a temp view."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.1)
     pairs.select("doc_a", "doc_b").createOrReplaceTempView("sim_pairs")
     return spark.sql(
@@ -2209,7 +2203,7 @@ def q_knn_int8(spark, sf_dir):
     quantizer (identical IEEE ops both engines, no round() tie-rule
     dependence) plus integer dots that are exactly representable as
     doubles make the whole search hash-match its SQL oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.quantized_topk_cosine(emb, query_id=0, k=10)
 
 
@@ -2257,7 +2251,7 @@ def q_repetition(spark, sf_dir):
     array per row; only the top-token pass shuffles, keyed on
     (doc, token). All ratios are exact-int divisions → identical
     doubles cross-engine."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = T.tokens("text")
     # sequence(0, -1) is DESCENDING in Spark, so the short-doc case
     # must branch to an empty array instead of relying on the bound.
@@ -2332,7 +2326,7 @@ def q_hard_negatives(spark, sf_dir):
     even the float sims hash-match), anchor-partitioned rank window —
     no global sort. Corpus-proportional anchor sets route through
     q_hard_negatives_ann (LSH candidates, join-only)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.hard_negatives(emb, F.col("vec_id") < 64, k=3)
 
 
@@ -2406,7 +2400,7 @@ def q_hard_negatives_ann(spark, sf_dir):
     side, no nested loop (asserted in tests/test_plans.py). The
     deterministic planes make even this ANN path hash-match its oracle:
     DuckDB reproduces the exact candidate set from literal planes."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.hard_negatives_ann(
         emb, F.col("vec_id") % 10 == 0, dim=64, k=3, bits_per_band=8
     )
@@ -2498,7 +2492,7 @@ def q_semdedup(spark, sf_dir):
     Output: the one-row invariant summary from _semdedup_invariants —
     exact corpus count plus booleans proving the marking is exactly
     the lower-id-neighbor relation within the realized clustering."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     k = max(8, emb.count() // 64)
     marked = S.semdedup(emb, k=k, threshold=0.3, n_iter=2)
     return _semdedup_invariants(emb, marked, threshold=0.3)
@@ -2525,7 +2519,7 @@ def q_quality_classifier(spark, sf_dir):
     the scan stage (operators/text.py:hashed_linear_score); a trained
     model swaps in a broadcast weight table with the identical plan.
     All-int64 arithmetic — scores hash-match the oracle exactly."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     score = T.hashed_linear_score(F.col("text")).alias("score")
     return docs.select("doc_id", score).select(
         "doc_id", "score", (F.col("score") > 0).alias("keep")
@@ -2556,7 +2550,7 @@ def q_random_projection(spark, sf_dir):
     stage (operators/similarity.py:random_project). Even the projected
     doubles hash-match the oracle — both engines accumulate the dot
     sequentially over identical literal planes."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.random_project(emb, dim=64, out_dim=8)
 
 
@@ -2588,7 +2582,7 @@ def q_bpe_merge_step(spark, sf_dir):
     (one shuffle, then pair explosion runs over TYPES x their length —
     orders of magnitude smaller than token volume); top-20 via
     orderBy+limit (TakeOrderedAndProject, no global sort)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     uni = docs.select(F.explode(T.tokens("text")).alias("w"))
     wc = uni.groupBy("w").agg(F.count(F.lit(1)).alias("f"))
     pairs = (
@@ -2647,7 +2641,7 @@ def q_prefix_dedup(spark, sf_dir):
     flags. Shape: md5 span keys, min-window PARTITIONED BY the hash
     (hash-distributed, high-cardinality) — never a global window; at
     100 TB this is two shuffles of (doc_id, 2 hashes), not of text."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     t = T.tokens("text")
     keyed = docs.select(
         "doc_id",
@@ -2722,7 +2716,7 @@ def q_label_propagation(spark, sf_dir):
     hash-partitioned by node."""
     from big_data_projects_spark.operators.graph import label_propagation
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p1"))
     b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p2"))
     pairs = (
@@ -2747,7 +2741,7 @@ def q_semdedup_hier(spark, sf_dir):
     Output: the one-row invariant summary from _semdedup_invariants
     (exact count + marking-exactness booleans), same oracle pattern as
     q_semdedup."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     marked = S.semdedup(emb, k=64, threshold=0.3, n_iter=2)
     return _semdedup_invariants(emb, marked, threshold=0.3)
 
@@ -2802,7 +2796,7 @@ def q_tfidf_cosine_pairs(spark, sf_dir):
     Determinism: idf lns round to 12 before multiplying, every product
     rounds to 12 and decimal-sums (order-independent), the final
     cosine rounds to 8 — so the float sims hash-match the oracle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(T.tokens("text")).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = tf.select("doc_id").distinct().agg(
@@ -2945,7 +2939,7 @@ def q_knn_pq(spark, sf_dir):
     the unrolled SQL oracle end-to-end. See operators/similarity.pq_topk
     for the scale contract (broadcast control-plane codebooks, no
     shuffle in encode)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.pq_topk(emb, query_id=0, k=10)
 
 
@@ -2990,7 +2984,7 @@ def q_inverted_index(spark, sf_dir):
     Hot terms are exactly the ones IDF scoring discards anyway."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tf = (
         docs.select("doc_id", F.explode(T.tokens("text")).alias("term"))
         .groupBy("term", "doc_id")
@@ -3060,7 +3054,7 @@ def q_containment_pairs(spark, sf_dir):
     q_ngram_jaccard (anti-join on hot shingles, never a cross join) —
     only the final scoring differs, so the candidate plan inherits the
     smoke-verified sub-proportional scaling."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh_all = D.shingles(docs, "doc_id", "text").persist()
     hot = (
         sh_all.groupBy("shingle")
@@ -3164,7 +3158,7 @@ def q_mmr_diversity(spark, sf_dir):
     (operators/similarity.mmr_select). The whole greedy trajectory —
     candidate sims, per-round scores, tiebreaks — hash-matches a
     10-level unrolled CTE oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return S.mmr_select(emb, query_id=0, k=10, pool=50, lam=0.7)
 
 
@@ -3241,7 +3235,7 @@ def q_rank_fusion(spark, sf_dir):
     fixed order."""
     lex_scores = q_bm25(spark, sf_dir)
     dense_scores = S.topk_cosine(
-        _t(spark, sf_dir, "embeddings"), query_id=0, k=100
+        load_table(spark, sf_dir, "embeddings"), query_id=0, k=100
     )
     wl = Window.orderBy(F.desc("bm25"), "doc_id")
     wd = Window.orderBy(F.desc("sim"), "vec_id")
@@ -3324,7 +3318,7 @@ def q_kn_bigram_ppl(spark, sf_dir):
     1-row type total broadcasts, per-doc scoring is bigram-keyed
     equi-joins + one doc_id aggregate; docs with <2 tokens drop out
     naturally on both sides."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", T.tokens("text").alias("t"))
     bi = (
         toks.filter(F.size("t") >= 2)
@@ -3471,7 +3465,7 @@ def q_pipeline_ccnet(spark, sf_dir):
         sharded_row_number,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # Per-doc lang-id (≈5 regex passes over corpus bytes) + the token
     # explode run in the scan stage — single-threaded on a
     # one-row-group testdata scan; spread the raw rows across cores
@@ -3570,8 +3564,6 @@ def q_pipeline_ccnet(spark, sf_dir):
     )
 
 
-
-
 def _bpe_fit(docs, n_steps: int = 8):
     """Shared BPE trainer (q_bpe_train / q_bpe_encode): collapse the
     corpus to the word-TYPE table, run ``n_steps`` greedy merge rounds
@@ -3631,8 +3623,6 @@ def _bpe_fit(docs, n_steps: int = 8):
         ).persist()
         cur, prev = nxt, cur
     return merges, cur, [df for df in (cur, prev) if df is not None]
-
-
 
 
 def _bpe_train_oracle(n_steps: int = 8) -> str:
@@ -3701,7 +3691,7 @@ def q_bpe_train(spark, sf_dir):
     lineage stays O(1) deep. Merge application uses the same
     left-to-right non-overlapping replace scan in both engines, so
     the full 8-step trajectory hash-matches the unrolled oracle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     merges, final_words, handles = _bpe_fit(docs)
     for df in handles:
         df.unpersist()
@@ -3761,7 +3751,7 @@ def q_preference_pairs(spark, sf_dir):
     / (score, id)) carries the tie-break inside the aggregate. The
     score is the q_text_quality int-ratio expression, identical in
     both engines, so the margin doubles hash-match."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     feats = T.quality_features(docs).select(
         "doc_id", "source", "quality_score"
     )
@@ -3858,7 +3848,7 @@ def q_ann_recall(spark, sf_dir):
     eval runs over a corpus SAMPLE (recall estimates need only a
     bounded candidate pool), keeping each window partition
     sample-sized."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     panel = (
         emb.select(F.col("vec_id").alias("__pid"))
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -4031,7 +4021,7 @@ def q_multimodal_dhash(spark, sf_dir):
     unchanged)."""
     from big_data_projects_spark.data import spread_small_scan
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # The 9x8-raster dHash is a heavy byte-level expression per row,
     # all in the scan stage — single-threaded on a one-row-group
     # testdata scan; spread the raw rows across cores first (no-op at
@@ -4133,7 +4123,7 @@ def q_dataset_report(spark, sf_dir):
     (low-cardinality groups stay AGGREGATES, never windows — the
     q_preference_pairs rule), and the final rollup is one source-keyed
     shuffle with map-side combine."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     feats = T.quality_features(docs).select(
         "doc_id", "source", "n_tokens", "quality_score",
         F.md5(F.col("text").cast("binary")).alias("fp"),
@@ -4261,7 +4251,7 @@ def q_bpe_encode(spark, sf_dir):
     broadcasts the type table when it fits) plus a doc_id aggregate.
     The whole train-then-encode trajectory hash-matches the unrolled
     oracle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     merges, final_words, handles = _bpe_fit(docs)
     for df in handles:
         if df is not final_words:
@@ -4333,7 +4323,7 @@ def q_tokenizer_roundtrip(spark, sf_dir):
     broadcasts it when it fits) and a source-keyed aggregate.  The
     whole train→encode→decode trajectory hash-matches the unrolled
     oracle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     merges, final_words, handles = _bpe_fit(docs)
     for df in handles:
         if df is not final_words:
@@ -4415,7 +4405,7 @@ def q_matryoshka_recall(spark, sf_dir):
     NOT importance-ordered, so measured recall is the pessimistic
     untrained-truncation floor; a trained MRL model reorders mass
     into the prefix and this same query measures the gain.)"""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     panel = (
         emb.select(F.col("vec_id").alias("__pid"))
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -4536,7 +4526,7 @@ def q_negative_sampling(spark, sf_dir):
     hash-matches. At 100 TB the output is the vocab-sized table a
     trainer broadcasts (or alias-samples from) — construction is one
     shuffle and a 1-row broadcast."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(T.tokens("text")).alias("term"))
     cf = (
         toks.where(F.col("term") != "")
@@ -4587,7 +4577,7 @@ def q_cluster_purity(spark, sf_dir):
     lineage would otherwise be replayed once per consuming branch
     (pure + stats), and only the two narrow columns ride the join —
     never the embedding array."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     asg = S.kmeans_assign(emb, k=8, n_iter=2)
     j = (
         emb.select("vec_id", "label")

@@ -14,12 +14,6 @@ from pyspark.sql import functions as F
 from big_data_projects_spark.data import load_table
 from big_data_projects_spark.operators.relational import dsum
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -36,9 +30,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def q_join_left_outer(spark, sf_dir):
     """Left outer join: customers with their order counts, 0 if none."""
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     per_cust = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -58,8 +52,8 @@ def q_join_left_outer(spark, sf_dir):
 )
 def q_join_semi(spark, sf_dir):
     """Left semi join (EXISTS): customers with a finished order."""
-    customer = _t(spark, sf_dir, "customer")
-    finished = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    customer = load_table(spark, sf_dir, "customer")
+    finished = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return customer.join(
         finished, customer.c_custkey == finished.o_custkey, "left_semi"
     ).select("c_custkey", "c_name")
@@ -77,8 +71,8 @@ def q_join_anti(spark, sf_dir):
     """Left anti join (NOT EXISTS): customers with no pending order.
     (Unfiltered NOT EXISTS is vacuous on this data — every customer has
     some order; the status filter keeps the anti-join path non-empty.)"""
-    customer = _t(spark, sf_dir, "customer")
-    pending = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
+    customer = load_table(spark, sf_dir, "customer")
+    pending = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
     return customer.join(
         pending, customer.c_custkey == pending.o_custkey, "left_anti"
     ).select("c_custkey", "c_name")
@@ -104,7 +98,7 @@ def q_join_anti(spark, sf_dir):
 )
 def q_set_ops(spark, sf_dir):
     """UNION / INTERSECT / EXCEPT over customer-key sets."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     buyers = orders.filter(F.col("o_orderstatus") == "O").select(
         F.col("o_custkey").alias("k")
     ).distinct()
@@ -142,7 +136,7 @@ def q_set_ops(spark, sf_dir):
 )
 def q_rollup(spark, sf_dir):
     """ROLLUP hierarchy totals (per flag+status, per flag, grand)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n"), dsum("l_quantity", "sum_qty"))
@@ -167,7 +161,7 @@ def q_rollup(spark, sf_dir):
 )
 def q_cube(spark, sf_dir):
     """CUBE: all grouping-set combinations."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -191,7 +185,7 @@ def q_cube(spark, sf_dir):
 def q_pivot(spark, sf_dir):
     """Pivot linestatus into columns (fixed value list → no extra pass;
     at scale always pass explicit pivot values)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
@@ -223,7 +217,7 @@ def q_pivot(spark, sf_dir):
 def q_window_analytics(spark, sf_dir):
     """rank/dense_rank/lag/lead + running decimal sum, all per-user
     partitioned windows (no global ordering anywhere)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return ev.select(
@@ -254,7 +248,7 @@ def q_window_analytics(spark, sf_dir):
 def q_having_topn(spark, sf_dir):
     """HAVING + deterministic ORDER BY ... LIMIT top-N (Spark plans
     TakeOrderedAndProject: per-partition heaps, no global sort)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_custkey")
         .agg(
@@ -280,7 +274,7 @@ def q_scalar_subquery(spark, sf_dir):
     """Scalar-subquery comparison against a global (decimal-exact)
     average — the boundary value is engine-identical so row membership
     matches. 1.5× threshold keeps a few thousand qualifying rows."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     avg_df = orders.agg(
         (F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double")
          / F.count(F.lit(1))).alias("avg_price")
@@ -304,7 +298,7 @@ def q_scalar_subquery(spark, sf_dir):
 )
 def q_case_when_bucketing(spark, sf_dir):
     """CASE/WHEN bucketing + two-key aggregation."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     bucket = (
         F.when(F.col("o_totalprice") < 50000, "small")
         .when(F.col("o_totalprice") < 150000, "medium")
@@ -326,7 +320,7 @@ def q_case_when_bucketing(spark, sf_dir):
 )
 def q_distinct_agg(spark, sf_dir):
     """Exact distinct-count per group (Catalyst expand + two-phase agg)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -354,7 +348,7 @@ def q_approx_agg(spark, sf_dir):
     of the exact distinct count, approx_percentile inside the exact
     [p40, p60] rank band — so a broken sketch or merge flips a hash-
     checked value."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     pct = lambda p: F.round(  # noqa: E731
         F.percentile("o_totalprice", F.lit(p)), 9
     )
@@ -384,7 +378,7 @@ def q_approx_agg(spark, sf_dir):
 )
 def q_median(spark, sf_dir):
     """Exact interpolated median per group."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.median("o_totalprice").alias("median_price")
     )
@@ -415,7 +409,7 @@ def q_rolling_time_window(spark, sf_dir):
     identical timestamps are RANGE peers and aggregate together
     regardless of tie order, so no tiebreak column is needed for
     determinism."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros("ts"))
@@ -451,7 +445,7 @@ def q_quantiles(spark, sf_dir):
     formulas may differ by an ulp between engines ((1−f)·lo+f·hi vs
     lo+(hi−lo)·f), so both sides round to 9 decimals — absorbing ulp
     noise at these magnitudes while proving exact-sort agreement."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     pcts = [0.25, 0.50, 0.75, 0.95]
     return orders.groupBy("o_orderpriority").agg(
         *[
@@ -484,7 +478,7 @@ def q_set_ops_all(spark, sf_dir):
     distinct forms. INTERSECT ALL keeps min(multiplicity), EXCEPT ALL
     subtracts multiplicities; Spark's intersectAll/exceptAll implement
     exactly these."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderstatus") == "O").select(
         F.col("o_custkey").alias("k")
     )
@@ -525,7 +519,7 @@ def q_window_firstlast(spark, sf_dir):
     frame ends at CURRENT ROW, which silently turns last_value into
     'current value' — a classic window bug both engines share, pinned
     here with the correct frame."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return ev.select(
@@ -568,7 +562,7 @@ def q_gapfill_hourly(spark, sf_dir):
     missing hours — the shape dashboards and rate monitors need. The
     spine generation is per-group and bounded by the group's own time
     range; no cross join against a global calendar."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hour = F.date_trunc("hour", F.col("ts"))
     bounds = ev.groupBy("event_type").agg(
         F.min(hour).alias("h_min"), F.max(hour).alias("h_max")
@@ -645,7 +639,7 @@ def q_pandas_udaf_trimmed(spark, sf_dir):
         total = int(kept.sum())  # exact: int64, no float accumulation
         return float(total) / float(len(kept)) / 1e6
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     micro = ev.filter(F.col("value").isNotNull()).select(
         "event_type",
         F.expr("CAST(FLOOR(value * 1e6 + 0.5) AS BIGINT)").alias("v"),
@@ -683,7 +677,7 @@ def q_union_by_name(spark, sf_dir):
     misaligns evolved schemas — the classic ingestion bug), missing
     columns null-filled. The count triple proves which side carried
     which column."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     v1 = orders.filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_totalprice"
     )
@@ -722,7 +716,7 @@ def q_nullsafe_join(spark, sf_dir):
     equi-joins drop null keys silently; null-safe joins pair them —
     the semantics data-repair and SCD merge logic depend on. The null
     bucket must survive the join (null_pairs > 0 proves it)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bucket = F.when(F.col("value") < 0.1, F.lit(None)).otherwise(
         F.floor(F.col("value") * 10).cast("long")
     )
@@ -750,7 +744,7 @@ def q_scd2_intervals(spark, sf_dir):
     the next observation's timestamp via lead() (null = current row).
     The as-of join (q_asof_join) is the read-side twin of this
     write-side shape. Partitioned window only — no global sort."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "user_id",
@@ -777,7 +771,7 @@ def q_histogram(spark, sf_dir):
     extra pass — and an explicit formula rather than width_bucket,
     whose edge rounding differs between engines. One shuffle on the
     bucket id."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy(
         F.floor(F.col("o_totalprice") / F.lit(50000.0))
         .cast("long")
@@ -802,7 +796,7 @@ def q_string_agg(spark, sf_dir):
     oracle's ORDER BY clause. At scale the per-group payload must be
     bounded (here: 1% of customers) — an unbounded listagg is an OOM,
     not an operator."""
-    cust = _t(spark, sf_dir, "customer").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey") % 100 == 0
     )
     return cust.groupBy("c_mktsegment").agg(
@@ -830,7 +824,7 @@ def q_grouping_id(spark, sf_dir):
     """grouping() markers on ROLLUP subtotals: the only correct way to
     distinguish a subtotal row from a genuine NULL in the data (the
     COALESCE('ALL') idiom in q_rollup conflates them)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -866,7 +860,7 @@ def q_bitwise_agg(spark, sf_dir):
     """Bitwise aggregates (and/or/xor over int64) — flag-set fusion and
     parity checks; associative+commutative, so partial aggregation works
     and results are order-independent by construction."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.bit_and("event_id").alias("all_bits"),
         F.bit_or("event_id").alias("any_bits"),
@@ -905,9 +899,9 @@ def q_merge_upsert(spark, sf_dir):
     values landed in the right rows."""
     from big_data_projects_spark.operators.relational import merge_upsert
 
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     source = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .groupBy(F.col("user_id").alias("c_custkey"))
         .agg(dsum("value", "c_acctbal"))
@@ -950,7 +944,7 @@ def q_incremental_rollup(spark, sf_dir):
     direct global aggregate (the oracle). This mergeability is why
     daily rollups never reprocess history; non-decomposable aggregates
     (exact median) can't do this and need the full input."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     dec = "decimal(38,6)"
 
     def partial(df):
@@ -989,7 +983,7 @@ def q_order_limit(spark, sf_dir):
     sort shuffles the whole table to rank 100 rows. The unique
     o_orderkey tie-break makes the selected SET deterministic, which
     is what the order-insensitive oracle hash checks."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -1023,7 +1017,7 @@ def q_window_ignore_nulls(spark, sf_dir):
     reading. Total order inside each user partition (ts, event_id)
     makes the fill deterministic. Scales as one hash-partition
     shuffle on user_id — no global sort."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1071,7 +1065,7 @@ def q_snapshot_diff(spark, sf_dir):
     perturbs every third value). At scale both sides shuffle once on
     the same key — with bucketed snapshots the join is co-located and
     shuffle-free (see q_bucketed_join)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     old = ev.filter(F.col("event_id") % 11 != 0).select("event_id", "value")
     new = ev.filter(F.col("event_id") % 13 != 0).select(
         "event_id",
@@ -1126,7 +1120,7 @@ def q_user_gap_features(spark, sf_dir):
     unix_micros int64 — no tz/DST semantics can leak into the gaps."""
     import pandas as pd
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     narrow = ev.select(
         "user_id", "event_id", F.unix_micros("ts").alias("us")
     )
@@ -1181,7 +1175,7 @@ def q_funnel(spark, sf_dir):
     filtered aggregate joined to the previous stage's entry times —
     the per-stage relations shrink monotonically, so every join after
     stage 1 has a small build side (AQE broadcasts it)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
 
     def stage(event_type, prev, tcol, prev_tcol):
         e = ev.filter(F.col("event_type") == event_type)
@@ -1236,7 +1230,7 @@ def q_retention_cohorts(spark, sf_dir):
     joined on user_id — both collapse data-scale rows to |users|-scale
     before the join. Week truncation is Monday-based ISO on both
     engines; outputs are DATE-typed so no tz leaks in."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     cohort = ev.groupBy("user_id").agg(
         F.date_format(F.date_trunc("week", F.min("ts")), "yyyy-MM-dd").alias(
             "cohort_week"
@@ -1277,7 +1271,7 @@ def q_running_count_distinct(spark, sf_dir):
     windows partition on bounded keys; no buffered distinct set is
     ever materialized per row, which is also why this scales where a
     naive per-row HashSet (the single-node implementation) would not."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w_first = Window.partitionBy("event_type", "user_id").orderBy(
         "ts", "event_id"
     )
@@ -1318,7 +1312,7 @@ def q_null_ordering(spark, sf_dir):
     null rows, which only matches because both engines agree on the
     explicit clause and the unique tie-break. Still planned as
     TakeOrderedAndProject."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     gapped = F.when(F.col("event_type") == "click", None).otherwise(
         F.col("value")
     )
@@ -1378,7 +1372,7 @@ def q_interval_overlap(spark, sf_dir):
     from big_data_projects_spark.operators.intervals import interval_overlap_join
     from big_data_projects_spark.operators.sessionize import sessionize
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     s = sessionize(ev, "user_id", "ts", gap_seconds=1800, tiebreak_col="event_id")
     iv = s.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("s_start"), F.max("ts").alias("s_end")
@@ -1430,7 +1424,7 @@ def q_sample_per_group(spark, sf_dir):
     sampling (training mixes often need exactly k docs per source).
     Deterministic under retries (hash order, never rand()); the rank
     window partitions by source, so no global sort."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
@@ -1470,7 +1464,7 @@ def q_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregation; the global top-10 is orderBy+limit
     (TakeOrderedAndProject: per-partition heaps, never a full sort);
     the corpus totals ride in as a broadcast 1-row scalar."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     c = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     tot = c.agg(
         F.sum("n_events").alias("total"),
@@ -1516,8 +1510,8 @@ def q_cogroup_stats(spark, sf_dir):
     memory, never corpus size."""
     import pandas as pd
 
-    ev = _t(spark, sf_dir, "events").select(F.col("user_id").alias("uid"))
-    od = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("uid"))
+    ev = load_table(spark, sf_dir, "events").select(F.col("user_id").alias("uid"))
+    od = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("uid"))
 
     def merge(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(
@@ -1559,8 +1553,8 @@ def q_asof_forward(spark, sf_dir):
     from big_data_projects_spark.operators.asof import asof_join
     from big_data_projects_spark.functions.timestamps import epoch_ms
 
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    od = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    od = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
     joined = asof_join(
         ev, od, left_on="user_id", right_on="o_custkey",
         left_time="ts", right_time="o_orderdate",
@@ -1605,8 +1599,8 @@ def q_asof_nearest(spark, sf_dir):
     from big_data_projects_spark.operators.asof import asof_join
     from big_data_projects_spark.functions.timestamps import epoch_ms
 
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    od = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    od = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
     joined = asof_join(
         ev, od, left_on="user_id", right_on="o_custkey",
         left_time="ts", right_time="o_orderdate",

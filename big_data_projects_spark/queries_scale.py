@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from big_data_projects_spark.data import load_table
 from big_data_projects_spark.operators.relational import dsum, salted_join
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
 
 # Power-sum accumulator type. Per-row products (x·x, x·y) are computed
 # in IEEE double — bit-identical on both engines for the same inputs —
@@ -44,11 +43,6 @@ from big_data_projects_spark.session import ensure_runtime_conf
 # (same pattern as dsum over revenue expressions). Pure decimal·decimal
 # products would overflow DuckDB's width-addition rule instead.
 _DEC = "decimal(38,6)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -97,7 +91,7 @@ def q_stats_moments(spark, sf_dir):
     # (no-op at real scale — see spread_small_scan; r12 optimization:
     # fresh-plan A/B 2.9 s → 1.2 s for this exact shape).
     li = spread_small_scan(
-        _t(spark, sf_dir, "lineitem").select(
+        load_table(spark, sf_dir, "lineitem").select(
             "l_returnflag", "l_quantity", "l_extendedprice"
         )
     )
@@ -147,8 +141,8 @@ def q_salted_join(spark, sf_dir):
     join runs on (key, salt) — a hot key's rows now land in N_SALT
     shuffle partitions instead of one straggler. Semantics are identical
     to the unsalted join, which is exactly what the oracle runs."""
-    events = _t(spark, sf_dir, "events")
-    customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    events = load_table(spark, sf_dir, "events")
+    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = salted_join(
         events,
         customer,
@@ -180,17 +174,16 @@ def q_bucketed_join(spark, sf_dir):
     with NO shuffle — tests/test_plans.py asserts the plan has no
     Exchange above the scans. The one-time bucketing write IS a shuffle;
     it's amortized across every downstream join/aggregate on the key."""
-    ensure_runtime_conf(spark)
     base = tempfile.mkdtemp(prefix="bdp_bucketed_")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     # At test scale the dim side fits the broadcast threshold and AQE
     # would hide the co-located-join shape this query exists to show
     # (at 100 TB neither side broadcasts); pin the shuffle-join path.
-    # Set AFTER the _t() loads (each re-pins the defaults) — the next
-    # builder's ensure_runtime_conf restores it.
+    # The registry wrapper's ensure_runtime_conf restores it before the
+    # next build.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     for df, name, key in (
         (li, "bdp_li_bucketed", "l_orderkey"),
@@ -232,7 +225,7 @@ def q_scan_json_schema(spark, sf_dir):
     the parquet original; doubles survive exactly (shortest-roundtrip
     formatting), timestamps to millisecond precision (year-granularity
     output is unaffected)."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     out = os.path.join(tempfile.mkdtemp(prefix="bdp_json_"), "events_json")
     events.write.mode("overwrite").json(out)
     back = spark.read.schema(events.schema).json(out)
@@ -257,8 +250,7 @@ def q_compaction(spark, sf_dir):
     orders into 64 files, compacts to 4, verifies the file count
     dropped, and proves the data survived byte-for-byte by aggregating
     the compacted copy against the original's oracle."""
-    ensure_runtime_conf(spark)
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     base = tempfile.mkdtemp(prefix="bdp_compact_")
     frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
     orders.repartition(64).write.mode("overwrite").parquet(frag)
@@ -294,8 +286,7 @@ def q_scan_json_corrupt(spark, sf_dir):
     100 TB a single bad record must never kill a scan), and the query
     accounts for good vs corrupt rows. The oracle pins the invariant:
     all original rows parse, exactly the injected lines quarantine."""
-    ensure_runtime_conf(spark)
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     out = os.path.join(tempfile.mkdtemp(prefix="bdp_json_bad_"), "events_json")
     events.write.mode("overwrite").json(out)
     bad = os.path.join(out, "zz_corrupt.json")
@@ -345,7 +336,7 @@ def q_salted_agg(spark, sf_dir):
     group is "hot" relative to 32 reducers, which is precisely the
     cardinality regime (few groups, huge groups) where this rewrite
     pays off at scale. The oracle is the plain one-phase aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     dec = "decimal(38,6)"
     salted = ev.withColumn(
         "salt", F.pmod(F.xxhash64("event_id"), F.lit(N_SALT))
@@ -400,7 +391,7 @@ def q_entropy(spark, sf_dir):
     (the pagerank_units docstring's 18th-digit note), flipping the
     last kept digit.  Integer units have no second round, so no tie
     to disagree on."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     c = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("k"))
     n = c.groupBy("user_id").agg(F.sum("k").alias("n"))
     p = F.col("k") / F.col("n").cast("double")
@@ -430,8 +421,8 @@ def q_shuffle_hash_hint(spark, sf_dir):
     hash build beats the sort-merge's two sorts. Results are
     strategy-independent (the oracle is the plain join); the plan
     shape is asserted in tests/test_plans.py."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer").select(
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     return (
@@ -471,7 +462,6 @@ def q_custom_source(spark, sf_dir):
     derives from md5(str(i))), so the driver's value-hash verifies the
     connector's output itself, not just a row count. ``sf_dir`` is
     unused: the source is its own data."""
-    ensure_runtime_conf(spark)
     _synth.register(spark)
     df = (
         spark.read.format("bdp_synth")
@@ -512,7 +502,6 @@ def q_custom_sink(spark, sf_dir):
 
     from big_data_projects_spark.sources import jsonl_sink
 
-    ensure_runtime_conf(spark)
     jsonl_sink.register(spark)
     agg = (
         load_table(spark, sf_dir, "orders")
@@ -554,7 +543,7 @@ def q_scan_text_lines(spark, sf_dir):
     (no shuffle) and the rollup is a single map-side-combined shuffle
     on a 10-value key. Synthetic text is \\t/\\n-free (word lists); the
     write asserts that precondition rather than assuming it."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     out = os.path.join(tempfile.mkdtemp(prefix="bdp_text_"), "docs_txt")
     dumped = docs.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), "text").alias(
@@ -604,7 +593,7 @@ def q_scan_binaryfile(spark, sf_dir):
     centralize); path/length/hash derivation is per-row with no
     shuffle. ASCII text == its UTF-8 bytes, so DuckDB's md5(varchar)
     matches Spark's md5(binary) over file bytes."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = tempfile.mkdtemp(prefix="bdp_binfile_")
     rows = (
         docs.filter(F.col("doc_id") < _BINFILE_DOCS)
@@ -652,7 +641,7 @@ def q_zorder_layout(spark, sf_dir):
     shift/and/or codegen — no UDF, no extra pass."""
     from big_data_projects_spark.operators.layout import zordered
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     base = os.path.join(tempfile.mkdtemp(prefix="bdp_zorder_"), "li_z")
     zordered(li, ["l_partkey", "l_suppkey"]).write.mode(
         "overwrite"
@@ -687,10 +676,9 @@ def q_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffling the whole fact table and shuffling only the ~20% that
     matches a selective dim predicate — the row-level complement of
     partition-level dynamic pruning. Local-scale thresholds are
-    overridden here; ensure_runtime_conf pins the defaults back for
-    every other builder, so the override cannot leak.
+    overridden here; the registry wrapper's ensure_runtime_conf pins the
+    defaults back before every other build, so the override cannot leak.
     """
-    ensure_runtime_conf(spark)
     # Local parquet is far below the 10G application-side / broadcast
     # thresholds; lower both so the plan exercises the same injection a
     # 100 TB fact scan would get by default.
@@ -735,7 +723,7 @@ def q_range_sharded_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     come back 0 — the interval self-join runs over the n_files-row
     stats relation (control-plane sized, a broadcast nested loop over
     dozens of rows even at 100 TB: file COUNT, not file content)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = os.path.join(tempfile.mkdtemp(prefix="bdp_range_"), "docs_sharded")
     (
         docs.repartitionByRange(8, "doc_id")
@@ -788,7 +776,7 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema evolution happens at the scan, not with a backfill rewrite.
     Footer-merge cost is bounded by file COUNT (control-plane), not
     data size."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = os.path.join(tempfile.mkdtemp(prefix="bdp_drift_"), "feed")
     docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "source", "lang"
@@ -823,7 +811,7 @@ def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     never read (dynamicpruning#… in the plan, asserted by
     tests/test_plans.py). At scale this is reading 2 of N partitions
     instead of the whole fact table."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     base = os.path.join(tempfile.mkdtemp(prefix="bdp_dpp_"), "events_part")
     ev.select("event_id", "event_type", "value").write.mode(
         "overwrite"
@@ -858,8 +846,7 @@ def q_scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     them to _corrupt_record instead of failing the scan, and the query
     accounts good vs quarantined rows. The oracle pins the invariant:
     every original row parses, exactly the injected lines quarantine."""
-    ensure_runtime_conf(spark)
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     out = os.path.join(tempfile.mkdtemp(prefix="bdp_csv_bad_"), "customer_csv")
     customer.write.mode("overwrite").option("header", True).csv(out)
     bad = os.path.join(out, "zz_corrupt.csv")
@@ -914,7 +901,6 @@ def q_scan_xml(spark, sf_dir):
     import os
     import tempfile
 
-    ensure_runtime_conf(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -958,7 +944,6 @@ def q_observe_metrics(spark, sf_dir):
     the filtered aggregate, hash-checked as usual."""
     from pyspark.sql import Observation
 
-    ensure_runtime_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     obs = Observation("ingest_audit")
     kept = ev.observe(
@@ -989,7 +974,6 @@ def q_metadata_columns(spark, sf_dir):
     loaders and quarantine triage key on. Grouping by the hidden
     column proves it resolves through the scan; the oracle states the
     expected single-file layout of the testdata table."""
-    ensure_runtime_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(
         F.col("_metadata.file_name").alias("file_name")
@@ -1029,7 +1013,7 @@ def q_codec_tradeoff(spark, sf_dir):
     import shutil
     import tempfile
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     base = ev.repartition(4, "user_id").sortWithinPartitions(
         "user_id", "event_id"
     )

@@ -29,14 +29,8 @@ from pyspark.sql import functions as F
 
 from big_data_projects_spark.data import load_table
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
 
 _DEC = "decimal(38,6)"
-
-
-def _t(spark, sf_dir, name):
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -96,7 +90,7 @@ def q_interpolate_linear(spark, sf_dir):
     global sort. Mean = exact decimal sum / count; the interpolation
     `pv + (nv-pv)*frac` is written identically in the oracle, so the
     doubles are bit-identical."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     actual = ev.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("h")
     ).agg(
@@ -168,7 +162,7 @@ def q_ewma(spark, sf_dir):
     IEEE operation matches and the final doubles are bit-identical
     (0.25 and 0.75 are exact binary fractions — no literal-conversion
     noise on either side)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     arr = F.array_sort(
         F.collect_list(
             F.struct(
@@ -221,7 +215,7 @@ def q_event_transitions(spark, sf_dir):
     everything after the first shuffle is control-plane sized at any
     corpus scale. p = exact integer count / exact integer row sum, the
     same double division on both sides."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = ev.select(
         F.col("event_type").alias("from_type"),
@@ -268,7 +262,7 @@ def q_mad_outliers(spark, sf_dir):
     key space. The strict > comparison is on bit-identical doubles
     (both sides compute abs(value - med) and 3*mad in the same
     order)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(F.median("value").alias("med"))
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_type",
@@ -327,7 +321,7 @@ def q_trend_slope(spark, sf_dir):
     accumulation is exact at any per-user history length. One groupBy
     shuffle total, degenerate (vertical / single point) series
     filtered by the zero-variance denominator."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id")
     sec = F.expr("unix_micros(ts) DIV 1000000")
     pts = ev.select(
@@ -376,7 +370,7 @@ def q_hll_uniques(spark, sf_dir):
     the sketch is deterministic for a given input, so the boolean is a
     stable value the oracle can assert; a broken merge or estimator
     flips it."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
     ).agg(F.hll_sketch_agg("user_id").alias("sk"))
@@ -422,7 +416,7 @@ def q_sketch_top_terms(spark, sf_dir):
     exact heavy hitter appears in the sketch with its count inside ±2%
     (deterministic for a given input; the oracle asserts the exact
     counts and the literal TRUE)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok")
     ).where(F.col("tok") != "")
@@ -478,7 +472,7 @@ def q_ohlc_bars(spark, sf_dir):
     partitioned by (type, hour) — bounded frames, never a global sort —
     then one groupBy over the same key, which AQE plans as a single
     exchange since the partitioning matches."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     h = F.date_trunc("hour", "ts")
     w = (
         Window.partitionBy("event_type", "h")
@@ -580,7 +574,7 @@ def q_drift_psi(spark, sf_dir):
     where Spark's shortest-repr double→decimal cast and DuckDB's
     binary expansion disagree — the failure a testdata refresh
     surfaced on q_entropy.)"""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     nb = _PSI_BINS
     b = ev.select(
         "event_type",
@@ -674,7 +668,7 @@ def q_approx_percentile_bound(spark, sf_dir):
     would flip. At 100 TB the sketch path is the only viable one —
     exact per-group percentile sorts; the sketch merges bounded
     summaries map-side."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     pct = lambda p: F.round(F.percentile("value", F.lit(p)), 9)  # noqa: E731
     apx = lambda p: F.approx_percentile(  # noqa: E731
         "value", F.lit(p), F.lit(10000)
@@ -739,7 +733,7 @@ def q_feature_store_join(spark, sf_dir):
     streams — one shuffle each, no broadcast requirement), left
     semantics with 0-fill for users with no feature history. The
     oracle is DuckDB's native ASOF LEFT JOIN twice."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     from big_data_projects_spark.operators.asof import asof_join
 
     labels = ev.where(F.col("event_type") == "purchase").select(
@@ -820,7 +814,7 @@ def q_cdc_apply(spark, sf_dir):
     honors tombstones. One key-partitioned rank window and one count
     aggregate on the same key — a single shuffle's worth of work at
     any scale."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
     )
@@ -902,7 +896,7 @@ def q_profile_columns(spark, sf_dir):
     expand — still a single scan), then stack() unpivots the 1-row
     result executor-locally. At 100 TB this is the profile you run
     before committing a new feed: one scan, no per-column jobs."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     reprs = {
         "event_id": (F.min("event_id"), F.max("event_id")),
         "ts": (F.unix_millis(F.min("ts")), F.unix_millis(F.max("ts"))),
@@ -988,7 +982,6 @@ def q_shard_assignment(spark, sf_dir):
     at oracle scale and exactly what the broadcast array avoids at
     100 TB. md5-based positions are engine-portable (the q_hash_split
     recipe)."""
-    ensure_runtime_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     n, r = _N_SHARDS, _N_REPLICAS
     vn = spark.range(n * r).select(

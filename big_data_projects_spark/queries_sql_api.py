@@ -17,12 +17,6 @@ from pyspark.sql import functions as F
 
 from big_data_projects_spark.data import load_table
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark, sf_dir, name):
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -43,7 +37,7 @@ def q_parameterized_sql(spark, sf_dir):
     is identical to the static query at any scale, which is the whole
     point: templating costs nothing at 100 TB. The oracle states the
     same query with the literals inlined."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ev.createOrReplaceTempView("events_param_v")
     return spark.sql(
         """
@@ -80,9 +74,8 @@ def q_sql_variables(spark, sf_dir):
     is bound to a constant before the big query plans, so the per-row
     comparison is a folded literal, not a join. Exact decimal mean, so
     the threshold double is bit-identical to the oracle's CTE twin."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ev.createOrReplaceTempView("events_var_v")
-    ensure_runtime_conf(spark)
     spark.sql(
         "DECLARE OR REPLACE VARIABLE bdp_avg_value DOUBLE DEFAULT 0.0"
     )
@@ -127,7 +120,7 @@ def q_sql_scripting(spark, sf_dir):
     query; the script only carries scalars between them, so nothing
     here fights the optimizer at scale. The oracle states the three
     threshold counts as one conditional aggregate."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents_script_v")
     return spark.sql(
         """
@@ -170,7 +163,7 @@ def q_pandas_api_rollup(spark, sf_dir):
     converts back with to_spark(). Summed in exact integer cents so the
     result is order-independent and hash-matches; the count column
     proves the wrapper kept every row."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     narrow = ev.select(
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -209,9 +202,8 @@ def q_sql_udf(spark, sf_dir):
     Python UDF it costs NOTHING at 100 TB while still giving pipelines
     one shared definition. The oracle states the inlined expression,
     which is exactly what the optimizer sees."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents_udf_v")
-    ensure_runtime_conf(spark)
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION bdp_token_density(
@@ -258,7 +250,7 @@ def q_sql_pipe(spark, sf_dir):
     readable syntax costs nothing at any scale — this query pins that
     the entry point parses, binds, and optimizes like the classic
     one."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ev.createOrReplaceTempView("events_pipe_v")
     return spark.sql(
         """

@@ -22,19 +22,12 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_projects_spark.data import load_table
 from big_data_projects_spark.functions.timestamps import epoch_ms
 from big_data_projects_spark.operators.relational import davg, dsum
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _revenue():
@@ -58,7 +51,7 @@ def q_tpch_q6(spark, sf_dir):
     """TPC-H Q6 shape: selective filter + global aggregate. The whole
     query is one parquet scan — every predicate reaches PushedFilters
     and only 4 columns are read (see tests/test_plans.py)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -96,13 +89,13 @@ def q_tpch_q6(spark, sf_dir):
 def q_tpch_q3(spark, sf_dir):
     """TPC-H Q3 shape: filtered dim broadcast into a fact-fact join,
     grouped revenue, deterministic top-N (TakeOrderedAndProject)."""
-    cust = _t(spark, sf_dir, "customer").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
     )
     return (
@@ -139,11 +132,11 @@ def q_tpch_q4(spark, sf_dir):
     """TPC-H Q4 shape: EXISTS decorrelated to a left-semi join (the
     correlated predicate l_shipdate > o_orderdate rides along as a
     non-equi join condition on the semi join)."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
         orders.join(
             li,
@@ -178,15 +171,15 @@ def q_tpch_q5(spark, sf_dir):
     """TPC-H Q5 shape: 6-way snowflake join (region→nation→supplier
     broadcast chain; customer⋈orders⋈lineitem shuffle on their keys),
     with the local-supplier constraint c_nationkey = s_nationkey."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    supplier = _t(spark, sf_dir, "supplier")
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation")
+    supplier = load_table(spark, sf_dir, "supplier")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
 
     # Snowflake arm resolved driver-free: region⋈nation⋈supplier is tiny
     # → one broadcast of (s_suppkey, s_nationkey, n_name).
@@ -233,11 +226,11 @@ def q_tpch_q14(spark, sf_dir):
     part join (promo share of revenue; 'ECONOMY' plays PROMO%). Both
     sums accumulate in exact decimal; the ratio is computed in double
     with the identical (100·a)/b operation order on both engines."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-07-01").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     dec = "decimal(38,6)"
     rev = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(dec)
     promo = F.when(F.col("p_type") == "ECONOMY", rev).otherwise(F.lit(0).cast(dec))
@@ -272,9 +265,9 @@ def q_tpch_q18(spark, sf_dir):
     """TPC-H Q18 shape: HAVING subquery as a semi-join on the fact key,
     then re-join for the detail columns. The big-orders key set is the
     broadcast side (post-aggregation it is tiny)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(38,6)")).alias("q"))

@@ -33,20 +33,13 @@ Scale notes (100 TB design, applied throughout):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_projects_spark.data import load_table
 from big_data_projects_spark.operators.relational import davg, dsum
 from big_data_projects_spark.registry import register
-from big_data_projects_spark.session import ensure_runtime_conf
 
 _DEC = "decimal(38,6)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_conf(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _revenue():
@@ -89,13 +82,13 @@ def q_tpch_q2(spark, sf_dir):
 
     MIN over doubles is order-independent, so the cost = min_cost
     equality join is exact on both engines."""
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    li = _t(spark, sf_dir, "lineitem").select(
+    supplier = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
-    part = _t(spark, sf_dir, "part").filter(
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") <= 15) & (F.col("p_type") == "STANDARD")
     )
 
@@ -157,22 +150,22 @@ def q_tpch_q7(spark, sf_dir):
     disjunctive cross-role predicate that can only be applied after both
     arms are bound. supplier- and customer-side maps are broadcast; the
     lineitem⋈orders fact join is the only shuffle."""
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     supp_map = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(F.broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust_map = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .join(F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey)
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1998-01-01"))
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | (
@@ -221,10 +214,10 @@ def q_tpch_q8(spark, sf_dir):
     a conditional aggregate (supplier nation share of revenue). Both
     decimal sums are exact; the final ratio divides two doubles computed
     identically on both engines."""
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     asia_cust = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .join(
             F.broadcast(
                 nation.join(
@@ -236,19 +229,19 @@ def q_tpch_q8(spark, sf_dir):
         .select("c_custkey")
     )
     supp_map = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(nation.select("n_nationkey", "n_name")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    orders = _t(spark, sf_dir, "orders").filter(
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-01-01"))
         & (F.col("o_orderdate") < _ts("1998-01-01"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
 
     rev = _revenue().cast(_DEC)
     nation_rev = F.when(F.col("supp_nation") == "NATION_3", rev).otherwise(
@@ -290,17 +283,19 @@ def q_tpch_q9(spark, sf_dir):
     p_retailprice. The per-row profit expression is evaluated in double
     with the identical association order on both engines, then summed
     exactly in decimal."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
     supp_map = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation").select("n_nationkey", "n_name")),
+            F.broadcast(
+                load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+            ),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem")
     profit = _revenue() - (
         F.lit(0.1) * F.col("p_retailprice") * F.col("l_quantity")
     )
@@ -341,18 +336,20 @@ def q_tpch_q10(spark, sf_dir):
     revenue (TakeOrderedAndProject; the full sorted output is never
     materialized)."""
     cust = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation").select("n_nationkey", "n_name")),
+            F.broadcast(
+                load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+            ),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .select("c_custkey", "c_name", "c_acctbal", "n_name")
     )
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-07-01"))
         & (F.col("o_orderdate") < _ts("1996-10-01"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -393,17 +390,19 @@ def q_tpch_q11(spark, sf_dir):
     1-row broadcast (cross join), never a driver collect; both sides of
     the > compare doubles derived from exact decimal sums."""
     nation5 = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(
-                _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
+                load_table(spark, sf_dir, "nation").filter(
+                    F.col("n_name") == "NATION_5"
+                )
             ),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey")
     )
     scoped = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey", "l_extendedprice")
         .join(nation5, F.col("l_suppkey") == F.col("s_suppkey"))
     )
@@ -437,12 +436,12 @@ def q_tpch_q12(spark, sf_dir):
     order priority classes per line status. Adaptation: no l_shipmode /
     commit/receipt dates, so the mode filter becomes l_returnflag='N'
     and the date window uses l_shipdate."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_returnflag") == "N")
         & (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1997-01-01"))
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -474,9 +473,11 @@ def q_tpch_q13(spark, sf_dir):
     with only urgent orders must survive with count 0), then a second
     aggregation over the first's result. Adaptation: the o_comment
     NOT LIKE filter becomes o_orderpriority <> '1-URGENT'."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey").filter(
-        F.col("o_orderpriority") != "1-URGENT"
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = (
+        load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey")
+        .filter(F.col("o_orderpriority") != "1-URGENT")
     )
     per_cust = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_outer")
@@ -509,7 +510,7 @@ def q_tpch_q15(spark, sf_dir):
     twice (detail + scalar MAX), joined on equality with the scalar.
     The view is computed once and reused; MAX over doubles derived from
     exact decimal sums is engine-independent, so the equality is safe."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1996-04-01"))
     )
@@ -517,7 +518,7 @@ def q_tpch_q15(spark, sf_dir):
         dsum(_revenue(), "total_revenue")
     )
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
-    supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         revenue.join(F.broadcast(mx))
         .filter(F.col("total_revenue") == F.col("mx"))
@@ -547,16 +548,16 @@ def q_tpch_q16(spark, sf_dir):
     per wide group. Adaptation: lineitem plays partsupp; the
     'complaints' comment filter becomes s_acctbal < 0."""
     excluded = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
-    part = _t(spark, sf_dir, "part").filter(
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & (F.col("p_size").isin(1, 9, 14, 19, 23, 36, 45, 49))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(excluded, li.l_suppkey == F.col("s_suppkey"), "left_anti")
         .join(
@@ -594,11 +595,11 @@ def q_tpch_q17(spark, sf_dir):
     0.2*avg is computed identically (decimal-sum/count then double
     multiply) on both engines, so the < filter partitions rows
     identically."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pa = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         davg("l_quantity", "avg_qty")
     )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     return (
         li.join(part.select("p_partkey"), li.l_partkey == F.col("p_partkey"))
         .join(pa, li.l_partkey == F.col("pk"))
@@ -635,8 +636,8 @@ def q_tpch_q19(spark, sf_dir):
     join and keeps the OR-of-ANDs as a residual filter; the p_brand/
     p_size legs still push down to the part scan. Adaptation: no
     p_container, so each branch constrains p_size instead."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     cond = (
         (
             (F.col("p_brand") == "Brand#12")
@@ -685,8 +686,8 @@ def q_tpch_q20(spark, sf_dir):
     the (tiny, post-aggregation) qualifying key set. Adaptation: no
     partsupp availqty, so the threshold is total shipped quantity of
     'small%' parts in 1996. The HAVING compares exact decimals."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").startswith("small"))
-    li = _t(spark, sf_dir, "lineitem").filter(
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").startswith("small"))
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1997-01-01"))
     )
@@ -698,9 +699,11 @@ def q_tpch_q20(spark, sf_dir):
         .select("l_suppkey")
     )
     supplier = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation").select("n_nationkey", "n_name")),
+            F.broadcast(
+                load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+            ),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey", "s_name", "n_name")
@@ -741,11 +744,11 @@ def q_tpch_q21(spark, sf_dir):
     so 'late' := l_shipdate > o_orderdate + 30 days."""
     late_cut = F.col("o_orderdate") + F.expr("INTERVAL 30 DAY")
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     l1 = (
@@ -769,7 +772,7 @@ def q_tpch_q21(spark, sf_dir):
         & (other.r_ship > late_cut),
         "left_anti",
     )
-    supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         waiting.join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
@@ -807,7 +810,7 @@ def q_tpch_q22(spark, sf_dir):
     digits of c_name (no c_phone); 'has no orders' (vacuously false in
     this data — every customer orders) becomes 'has no URGENT orders'."""
     qual = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .select(
             F.substring("c_name", 16, 2).alias("cntrycode"),
             "c_custkey",
@@ -821,7 +824,7 @@ def q_tpch_q22(spark, sf_dir):
         davg("c_acctbal", "avg_bal")
     )
     urgent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )

@@ -16,6 +16,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from big_data_projects_spark.session import ensure_runtime_conf
+
 
 @dataclass(frozen=True)
 class Query:
@@ -61,6 +63,13 @@ def register(name: str, oracle: str | None = None):
                 spark.sparkContext._jvm.System.gc()
             except Exception:
                 pass  # non-py4j backends (Connect): rely on the cleaner
+            # The one place a registered query's runtime conf is set
+            # (callers hand us sessions we did not build). Running it before
+            # every build also undoes a previous builder's join-conf
+            # override (q_bloom_filter_join). Builders never re-pin, so
+            # what a caller sets before a raw build holds; the
+            # partition-invariance tests rely on that.
+            ensure_runtime_conf(spark)
             return fn(spark, sf_dir)
 
         REGISTRY[name] = Query(build, oracle, raw=fn)

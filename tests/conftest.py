@@ -17,5 +17,5 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="bdp-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="bdp-tests", cpus=8)
     yield s

@@ -195,6 +195,47 @@ def test_aqe_coalesces_small_shuffle_partitions(spark):
     assert "AQEShuffleRead" in plan and "coalesced" in plan, plan
 
 
+def test_stream_state_partitions_follow_session_cores(spark):
+    """Stateful streaming runs without AQE, so every shuffle partition
+    is a state store opened, written and checkpointed per micro-batch.
+    The registry wrapper sizes them to the session's cores whatever
+    the caller left set: a stale 32 must not survive into the stream."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class StateParts(StreamingQueryListener):
+        def __init__(self):
+            self.parts = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.parts += [op.numShufflePartitions for op in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get(key)
+    listener = StateParts()
+    spark.streams.addListener(listener)
+    try:
+        spark.conf.set(key, "32")
+        REGISTRY["q_stream_cdc_apply"].spark(spark, SF)
+        effective = spark.conf.get(key)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, prev)
+    assert listener.parts, "no stateful progress reported"
+    assert set(listener.parts) == {cores}, (listener.parts, cores)
+    assert effective == str(cores)
+
+
 def test_shuffle_hash_hint_controls_join_strategy(spark):
     plan = plan_of(spark, "q_shuffle_hash_hint")
     assert "ShuffledHashJoin" in plan, "hint ignored"
@@ -275,7 +316,7 @@ def test_bloom_filter_join_injects_runtime_filter(spark):
     # Row-level runtime filtering: the bloom filter built from the
     # selective orders side must reach the lineitem side BEFORE the
     # join, and the thresholds the builder overrides must be pinned
-    # back by the next builder's ensure_runtime_conf (no leak).
+    # back by the registry wrapper before the next build (no leak).
     df = REGISTRY["q_bloom_filter_join"].spark(spark, SF)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "might_contain" in plan, "runtime bloom filter not injected"

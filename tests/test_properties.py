@@ -225,27 +225,40 @@ def test_sequence_packing_partitions_the_token_stream(spark, lens, budget):
     assert got == expected
 
 
+def _assert_partition_count_invariant(spark, names):
+    """Run each query's raw builder under 32 and then 7 shuffle
+    partitions and require the same rows. The builders must leave the
+    caller's partition count alone: one that re-pinned it would run
+    both legs under the same layout and make the comparison vacuous,
+    so the effective setting is checked after every build."""
+    from big_data_projects_spark.queries import REGISTRY
+
+    sf = "/root/testdata/sf0.01"
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        out = {}
+        for nparts in ("32", "7"):
+            spark.conf.set(key, nparts)
+            for name in names:
+                df = REGISTRY[name].raw(spark, sf)
+                assert spark.conf.get(key) == nparts, f"{name} re-pins {key}"
+                rows = sorted(tuple(str(v) for v in r) for r in df.collect())
+                out.setdefault(name, []).append(rows)
+        for name, (a, b) in out.items():
+            assert a == b, f"{name}: result depends on partition count"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_new_window_operators_invariant_under_partition_count(spark):
     """Results of the hash-partitioned window/join operators added this
     round must not depend on the shuffle partition count (the thing
     that differs most between local[32] and a 1000-executor cluster)."""
-    from big_data_projects_spark.queries import REGISTRY
-
-    sf = "/root/testdata/sf0.01"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        out = {}
-        for nparts in ("32", "7"):
-            spark.conf.set("spark.sql.shuffle.partitions", nparts)
-            for name in ("q_prefix_dedup", "q_incremental_dedup",
-                         "q_skew_stats", "q_oov_rate"):
-                rows = REGISTRY[name].raw(spark, sf).collect()
-                key = sorted(tuple(str(v) for v in r) for r in rows)
-                out.setdefault(name, []).append(key)
-        for name, (a, b) in out.items():
-            assert a == b, f"{name}: result depends on partition count"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _assert_partition_count_invariant(spark, (
+        "q_prefix_dedup", "q_incremental_dedup",
+        "q_skew_stats", "q_oov_rate",
+    ))
 
 
 def test_late_round3_operators_invariant_under_partition_count(spark):
@@ -253,24 +266,11 @@ def test_late_round3_operators_invariant_under_partition_count(spark):
     (struct-min argmins + integer Lloyd stats under different shuffle
     layouts), the sharded prefix-sum shuffle/batching pair, the
     join-free skip-gram counts, and the integer PageRank fixpoint."""
-    from big_data_projects_spark.queries import REGISTRY
-
-    sf = "/root/testdata/sf0.01"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        out = {}
-        for nparts in ("32", "7"):
-            spark.conf.set("spark.sql.shuffle.partitions", nparts)
-            for name in ("q_knn_pq", "q_global_shuffle", "q_length_batching",
-                         "q_skipgram_pairs", "q_pagerank_sim_graph",
-                         "q_upsample_mix", "q_containment_pairs"):
-                rows = REGISTRY[name].raw(spark, sf).collect()
-                key = sorted(tuple(str(v) for v in r) for r in rows)
-                out.setdefault(name, []).append(key)
-        for name, (a, b) in out.items():
-            assert a == b, f"{name}: result depends on partition count"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _assert_partition_count_invariant(spark, (
+        "q_knn_pq", "q_global_shuffle", "q_length_batching",
+        "q_skipgram_pairs", "q_pagerank_sim_graph",
+        "q_upsample_mix", "q_containment_pairs",
+    ))
 
 
 def test_series_sketch_operators_invariant_under_partition_count(spark):
@@ -279,25 +279,12 @@ def test_series_sketch_operators_invariant_under_partition_count(spark):
     OLS moment sums, sketch estimates (HLL/approx_top_k/
     approx_percentile are merge-order-sensitive only if broken), and
     the RRF rank join must all be layout-independent."""
-    from big_data_projects_spark.queries import REGISTRY
-
-    sf = "/root/testdata/sf0.01"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        out = {}
-        for nparts in ("32", "7"):
-            spark.conf.set("spark.sql.shuffle.partitions", nparts)
-            for name in ("q_ewma", "q_interpolate_linear", "q_drift_psi",
-                         "q_trend_slope", "q_hll_uniques",
-                         "q_sketch_top_terms", "q_approx_percentile_bound",
-                         "q_dup_span", "q_rank_fusion"):
-                rows = REGISTRY[name].raw(spark, sf).collect()
-                key = sorted(tuple(str(v) for v in r) for r in rows)
-                out.setdefault(name, []).append(key)
-        for name, (a, b) in out.items():
-            assert a == b, f"{name}: result depends on partition count"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _assert_partition_count_invariant(spark, (
+        "q_ewma", "q_interpolate_linear", "q_drift_psi",
+        "q_trend_slope", "q_hll_uniques",
+        "q_sketch_top_terms", "q_approx_percentile_bound",
+        "q_dup_span", "q_rank_fusion",
+    ))
 
 
 @given(
@@ -442,25 +429,12 @@ def test_curation_operators_invariant_under_partition_count(spark):
     threshold sweep, and the PII prevalence counts must not depend on
     the shuffle layout (local[32] vs a 1000-executor cluster is first
     and foremost a partition-count change)."""
-    from big_data_projects_spark.queries import REGISTRY
-
-    sf = "/root/testdata/sf0.01"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        out = {}
-        for nparts in ("32", "7"):
-            spark.conf.set("spark.sql.shuffle.partitions", nparts)
-            for name in ("q_dsir_weights", "q_dsir_ess",
-                         "q_quality_calibration", "q_annotator_agreement",
-                         "q_pass_at_k", "q_cross_source_leakage",
-                         "q_dedup_threshold_sweep", "q_pii_prevalence"):
-                rows_ = REGISTRY[name].raw(spark, sf).collect()
-                key = sorted(tuple(str(v) for v in r) for r in rows_)
-                out.setdefault(name, []).append(key)
-        for name, (a, b) in out.items():
-            assert a == b, f"{name}: result depends on partition count"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _assert_partition_count_invariant(spark, (
+        "q_dsir_weights", "q_dsir_ess",
+        "q_quality_calibration", "q_annotator_agreement",
+        "q_pass_at_k", "q_cross_source_leakage",
+        "q_dedup_threshold_sweep", "q_pii_prevalence",
+    ))
 
 
 def test_aqe_toggle_invariance(spark):
@@ -469,10 +443,9 @@ def test_aqe_toggle_invariance(spark):
     runtime join-strategy switches) every representative query must
     produce byte-identical results. Catches logic that accidentally
     depends on the runtime partition layout AQE produces (the exact
-    failure mode of sharded prefix-sums and banded joins). AQE is
-    pinned on by ensure_runtime_conf at the top of every builder, so
-    the off-leg temporarily rewires that pin."""
-    from big_data_projects_spark import session as sess
+    failure mode of sharded prefix-sums and banded joins). The raw
+    builders do not re-pin runtime conf, so the off-leg is a plain
+    session setting."""
     from big_data_projects_spark.queries import REGISTRY
 
     sf = "/root/testdata/sf0.01"
@@ -489,16 +462,17 @@ def test_aqe_toggle_invariance(spark):
             got[name] = sorted(tuple(str(v) for v in r) for r in rows_)
         return got
 
-    saved = {k: sess._REQUIRED_RUNTIME_CONF.get(k) for k in aqe_keys}
+    saved = {k: spark.conf.get(k) for k in aqe_keys}
     try:
         on = run_all()
         for k in aqe_keys:
-            sess._REQUIRED_RUNTIME_CONF[k] = "false"
             spark.conf.set(k, "false")
         off = run_all()
+        assert all(spark.conf.get(k) == "false" for k in aqe_keys), (
+            "a builder re-enabled AQE"
+        )
     finally:
         for k, v in saved.items():
-            sess._REQUIRED_RUNTIME_CONF[k] = v
             spark.conf.set(k, v)
     for name in names:
         assert on[name] == off[name], f"{name}: result depends on AQE"
@@ -508,25 +482,12 @@ def test_round6_continuation_ops_invariant_under_partition_count(spark):
     """Partition-count invariance for the trainer (moment sums must be
     decimal-order-free) and the funnel (char-explode aggregate + doc
     join under different layouts)."""
-    from big_data_projects_spark.queries import REGISTRY
-
-    sf = "/root/testdata/sf0.01"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        out = {}
-        for nparts in ("32", "7"):
-            spark.conf.set("spark.sql.shuffle.partitions", nparts)
-            for name in ("q_quality_lr_train", "q_filter_ablation",
-                         "q_dedup_survivor_bias", "q_split_leakage",
-                         "q_encoding_audit", "q_sft_turn_audit",
-                         "q_vocab_growth", "q_code_switch_audit"):
-                rows_ = REGISTRY[name].raw(spark, sf).collect()
-                key = sorted(tuple(str(v) for v in r) for r in rows_)
-                out.setdefault(name, []).append(key)
-        for name, (a, b) in out.items():
-            assert a == b, f"{name}: result depends on partition count"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _assert_partition_count_invariant(spark, (
+        "q_quality_lr_train", "q_filter_ablation",
+        "q_dedup_survivor_bias", "q_split_leakage",
+        "q_encoding_audit", "q_sft_turn_audit",
+        "q_vocab_growth", "q_code_switch_audit",
+    ))
 
 
 def test_round8_ops_invariant_under_partition_count(spark):
@@ -534,22 +495,9 @@ def test_round8_ops_invariant_under_partition_count(spark):
     MERGE verdict/canonical assignment (min aggregates over candidate
     pairs must be layout-free) and the round-trip audit (the 8-round
     argmax trajectory and the serving join under different layouts)."""
-    from big_data_projects_spark.queries import REGISTRY
-
-    sf = "/root/testdata/sf0.01"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        out = {}
-        for nparts in ("32", "7"):
-            spark.conf.set("spark.sql.shuffle.partitions", nparts)
-            for name in ("q_dedup_merge_ingest", "q_tokenizer_roundtrip",
-                         # round-9 registration: in-row routing +
-                         # min-agg verdicts must be layout-free too
-                         "q_ivf_merge_ingest"):
-                rows_ = REGISTRY[name].raw(spark, sf).collect()
-                key = sorted(tuple(str(v) for v in r) for r in rows_)
-                out.setdefault(name, []).append(key)
-        for name, (a, b) in out.items():
-            assert a == b, f"{name}: result depends on partition count"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _assert_partition_count_invariant(spark, (
+        "q_dedup_merge_ingest", "q_tokenizer_roundtrip",
+        # round-9 registration: in-row routing +
+        # min-agg verdicts must be layout-free too
+        "q_ivf_merge_ingest",
+    ))

@@ -336,7 +336,7 @@ def main() -> None:
     from big_data_projects_spark.queries import REGISTRY
     from big_data_projects_spark.session import get_spark
 
-    spark = get_spark(app_name="dump-plans", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="dump-plans", cpus=8)
 
     out = [
         "# PLANS — physical-plan review of representative queries",

@@ -26,7 +26,7 @@ def main() -> None:
     from big_data_projects_spark.session import get_spark
     from tests.oracle_utils import compare_query
 
-    spark = get_spark(app_name="oracle-sweep", cpus=16, shuffle_partitions=16)
+    spark = get_spark(app_name="oracle-sweep", cpus=16)
     spark.sparkContext.setLogLevel("ERROR")
 
     failures: list[tuple[str, str, str]] = []

@@ -52,7 +52,7 @@ def main() -> None:
     from big_data_projects_spark.session import ensure_runtime_conf, get_spark
     from big_data_projects_spark.queries import REGISTRY
 
-    spark = get_spark(app_name="bdp-profile", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark(app_name="bdp-profile", cpus=cpus)
 
     # Warm page cache + codegen exactly as bench.py does.
     from pyspark.sql import functions as F

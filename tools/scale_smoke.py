@@ -579,9 +579,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (
         os.cpu_count() or 4
     )
-    spark = get_spark(
-        app_name="scale-smoke", cpus=cpus, shuffle_partitions=cpus
-    )
+    spark = get_spark(app_name="scale-smoke", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     x1_dir = WORK / "x1"
